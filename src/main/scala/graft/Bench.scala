@@ -17,6 +17,26 @@ object Bench {
   private[graft] def regressionTrigger(now: Double, prev: Double): Boolean =
     now > 0 && prev > 0 &&
       ((prev >= 0.3 && now / prev >= 1.5) || (now >= 0.5 && now / prev >= 3.0))
+
+  // Millisecond precision keeps the one-line summary compact — the
+  // harness captures only a bounded tail of the run log, and a line that
+  // overflows it is unparseable (worse than a slightly rounded number).
+  private def fmt(v: Double): String =
+    java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The per-query {oneshot, retest, load} triples of every retest. */
+  private[graft] def retestedJson(retested: collection.Map[String, (Double, Double, Double)]): String =
+    retested.toSeq.sortBy(_._1).map { case (k, (t1, t2, l)) =>
+      s"""  "$k": {"oneshot": ${fmt(t1)}, "retest": ${fmt(t2)}, "load": ${fmt(l)}}"""
+    }.mkString("{\n", ",\n", "\n}")
+
+  /** BENCH_RETESTED.json: the retest triples stamped with the run's sf and
+    * full-registry path, so a stale file, or one from another scale or a
+    * FULL_PATH=0 run, identifies itself beside a fresh BENCH_FULL.json.
+    */
+  private[graft] def retestedRecord(sfDir: String, fullPath: String, triples: String): String =
+    s"""{\n"sf": "$sfDir",\n"full_path": "$fullPath",\n"retested": $triples\n}\n"""
+
   /** Headline benchmark set: the heaviest representative per operator
     * family (scan/agg, joins, windows, set ops, scalar fns, text, dedup,
     * vector search, streaming-in-batch, media, reference parity). The
@@ -80,19 +100,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // WITH RECURSIVE's row-budget guard defaults to 1M TOTAL rows — a
-      // runaway-recursion rail, not a resource limit. rc1's recursion is
-      // depth-bounded (r <= 10) and its per-level row count is DATA-sized
-      // (one row per live customer chain), so the x8 scale sweep tripped
-      // the default honestly. Size the budget for data, keep the rail.
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session before timing: parquet reader, typed pipeline,
     // shuffle, window, and explode codegen paths — the first *measured*
@@ -277,10 +285,6 @@ object Bench {
     val results = withRetest(SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .map { case (name, fn) => name -> timeQuery(name, fn, repsFor(name)) })
-    // Millisecond precision keeps the one-line summary compact — the
-    // harness captures only a bounded tail of the run log, and a line that
-    // overflows it is unparseable (worse than a slightly rounded number).
-    def fmt(v: Double): String = java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
@@ -334,12 +338,13 @@ object Bench {
     // pass runs BEFORE the summary line is printed: round 6's summary was
     // unparseable because this pass's trailing WARNs pushed the
     // already-printed JSON line out of the driver's bounded tail capture.
+    // Registry-tail entries get the same reproduce-before-flag retest:
+    // the judge reads BENCH_FULL's deltas for >=1.5x entries too.
+    val rest = if (fullPath == "0") Nil else withRetest(SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot { case (n, _) => results.exists(_._1 == n) }
+      .map { case (name, fn) => name -> timeQuery(name, fn, repsFor(name)) })
+    val retestedMap = retestedJson(retested)
     if (fullPath != "0") {
-      // Registry-tail entries get the same reproduce-before-flag retest:
-      // the judge reads BENCH_FULL's deltas for >=1.5x entries too.
-      val rest = withRetest(SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (n, _) => results.exists(_._1 == n) }
-        .map { case (name, fn) => name -> timeQuery(name, fn, repsFor(name)) })
       val allResults = (results ++ rest).sortBy(_._1)
       val loadEnd = java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
       val body = allResults.map { case (k, v) => s"""  "$k": ${fmt(v)}""" }
@@ -356,9 +361,6 @@ object Bench {
       val deltas = deltaMap(allResults).map { case (k, now, p, r) =>
         s"""  "$k": {"now": ${fmt(now)}, "prev": ${fmt(p)}, "ratio": ${fmt(r)}}"""
       }.mkString("{\n", ",\n", "\n}")
-      val retestedJson = retested.map { case (k, (t1, t2, l)) =>
-        s"""  "$k": {"oneshot": ${fmt(t1)}, "retest": ${fmt(t2)}, "load": ${fmt(l)}}"""
-      }.mkString("{\n", ",\n", "\n}")
       // Per-query sample counts (a retest adds min-of-3 on top — those
       // queries are listed in `retested`); only exceptions to the default
       // `repeat` are recorded, so the common case stays one line.
@@ -366,19 +368,15 @@ object Bench {
         s""""$k": $r""" }.mkString("{", ", ", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
         body + "\"failed\": " + allFailed + ",\n\"flaky\": " + flakyJson +
-          ",\n\"retested\": " + retestedJson +
+          ",\n\"retested\": " + retestedMap +
           ",\n\"reps\": " + repsJson +
           ",\n\"deltas\": " + deltas + "\n}\n")
-    } else {
-      // Even with the full-registry file disabled, the retest detail must
-      // land SOMEWHERE durable — the compact stdout line no longer carries
-      // it (see below).
-      val retestedJson = retested.map { case (k, (t1, t2, l)) =>
-        s"""  "$k": {"oneshot": ${fmt(t1)}, "retest": ${fmt(t2)}, "load": ${fmt(l)}}"""
-      }.mkString("{\n", ",\n", "\n}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_RETESTED.json"), retestedJson + "\n")
     }
+    // The retest detail always lands somewhere durable — the compact
+    // stdout line carries only names (see below) — and the stamped file is
+    // rewritten on every run, so it is never a stale leftover.
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_RETESTED.json"),
+      retestedRecord(sfDir, fullPath, retestedMap))
     // 1-minute system load average at the end of the timed pass: numbers
     // recorded on a contended box (load >> cpu count) are not comparable
     // to idle-box baselines, and the record should say so itself.

@@ -13,7 +13,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val only: Set[String] = if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val spark = GraftSession.create(master = "local[32]", cores = 32)
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

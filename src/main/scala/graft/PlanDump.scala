@@ -17,7 +17,7 @@ object PlanDump {
     val suffix = if (args.length > 2) args(2) else "before"
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").toSet else Set.empty
-    val spark = GraftSession.create(master = "local[32]", cores = 32)
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.query.{RangeQuery, RefParity}
 
@@ -10,7 +9,7 @@ import graft.query.{RangeQuery, RefParity}
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = GraftSession.create(master = "local[8]", cores = 8)
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     // pure-SQL path through GraftSession: registered views + native fn

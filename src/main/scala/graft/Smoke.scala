@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc local smoke main: prints schemas and runs every registered query
   * at a small sf. Not part of the driver contract.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // data-sized budget for depth-bounded WITH RECURSIVE (see Bench)
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     println("== events schema ==")

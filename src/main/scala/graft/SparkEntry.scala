@@ -20,20 +20,6 @@ object SparkEntry {
     Relational.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    raw.map { case (name, fn) =>
-      name -> { (s: SparkSession, d: String) =>
-        // Engine-level optimizations apply to EVERY registered query (the
-        // config-free equivalent of spark.sql.extensions=GraftExtensions):
-        // the window-top-k → bounded-heap rewrite fires wherever a query
-        // uses the row_number-filter idiom (w1, kNN ranking, keep-first
-        // dedup), not only through the explicit TopK API.
-        graft.plans.TopKRewriteRule.install(s)
-        graft.connector.StatsPropagationRule.install(s)
-        fn(s, d)
-      }
-    }
-
-  private def raw: Map[String, (SparkSession, String) => DataFrame] =
     RefParity.queries ++
     Relational.queries ++
     Windows.queries ++

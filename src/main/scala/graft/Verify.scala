@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,16 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name filter for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // data-sized budget for depth-bounded WITH RECURSIVE (see Bench)
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A refused or failed query must leave NO dump behind: with a reused

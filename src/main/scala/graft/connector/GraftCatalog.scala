@@ -73,9 +73,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"catalog $name needs spark.sql.catalog.$name.warehouse")
     warehouse = new Path(w)
     fs.mkdirs(warehouse)
-    // Catalog registration is the SQL user's single graft touchpoint —
-    // make sure scans planned through it report manifest stats.
-    StatsPropagationRule.install(spark)
     ()
   }
 

@@ -97,10 +97,6 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    // Schema inference runs at load() — analysis time, before this
-    // query's optimization — so the stats rule is in place for the very
-    // first read through the path-based surface too.
-    StatsPropagationRule.install(SparkSession.active)
     val (b, p) = (basePath(options), pinOf(options))
     // A not-yet-created table (streaming sink target, first batch write)
     // has no schema; reads of it still fail loudly at scan build.

@@ -8,11 +8,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The catalog-scoped SQL function surface (`SELECT cat.system.fnv64(x)`)
   * — Spark's FunctionCatalog tier, completing the function-exposure
-  * ladder: session-registered natives ([[graft.functions.GraftFunctions]]
-  * / the extensions injection) serve one session; catalog functions
-  * travel WITH the catalog, so any session that mounts the warehouse gets
-  * them, version-consistently, with no session setup at all (Iceberg
-  * exposes its bucket/truncate transforms exactly this way).
+  * ladder: session natives (injected by [[graft.functions.GraftExtensions]])
+  * serve one session; catalog functions travel WITH the catalog, so any
+  * session that mounts the warehouse gets them, version-consistently,
+  * with no session setup at all (Iceberg exposes its bucket/truncate
+  * transforms exactly this way).
   *
   * Each function binds to a [[ScalarFunction]] with BOTH `produceResult`
   * (interpreted) and the `invoke` magic method — Spark prefers the

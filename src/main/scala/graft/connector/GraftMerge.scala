@@ -100,17 +100,6 @@ object GraftMergeStrategy extends SparkStrategy {
       }.toSeq
     case _ => Nil
   }
-
-  /** Thread-safe idempotent runtime install alongside the other graft
-    * strategies; the config-driven route is `GraftExtensions`.
-    */
-  def install(spark: SparkSession): Unit = GraftMergeStrategy.synchronized {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraStrategies.contains(GraftMergeStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GraftMergeStrategy
-    }
-  }
 }
 
 private[connector] case class GraftMergeExec(

@@ -327,16 +327,4 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       "answered by re-aggregating the view")
     Aggregate(groupAttrs, outs, viewPlan)
   }
-
-  /** Thread-safe idempotent runtime install (the StatsPropagationRule
-    * mechanism); also injected by `GraftExtensions` for config-driven
-    * sessions.
-    */
-  def install(spark: SparkSession): Unit = MvRewriteRule.synchronized {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraOptimizations.contains(MvRewriteRule)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ MvRewriteRule
-    }
-  }
 }

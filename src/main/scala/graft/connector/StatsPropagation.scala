@@ -1,6 +1,5 @@
 package graft.connector
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.{Statistics, SupportsReportStatistics, V1Scan}
@@ -38,9 +37,10 @@ private[connector] class StatsV1ScanWrapper(
 }
 
 /** Rewrites `DataSourceV2ScanRelation(scan = V1ScanWrapper(s))` where `s`
-  * reports statistics into the stats-exposing wrapper. Runs in the user
-  * optimizer batch — after Spark's early scan pushdown built the wrapper,
-  * before join strategy reads plan statistics. A pure metadata swap: the
+  * reports statistics into the stats-exposing wrapper. Runs in the "User
+  * Provided Optimizers" batch ([[graft.functions.GraftExtensions]] puts it
+  * there) — after Spark's early scan pushdown built the wrapper, before
+  * join strategy reads plan statistics. A pure metadata swap: the
   * wrapped scan, pushed filters and pushed operators are untouched, so
   * physical planning (which pattern-matches `V1ScanWrapper`) proceeds
   * identically.
@@ -57,23 +57,5 @@ object StatsPropagationRule extends Rule[LogicalPlan] {
         }
       case _ => r
     }
-  }
-
-  /** Thread-safe idempotent runtime install (the same mechanism as
-    * `TopKRewriteRule.install`). Called from every graft entry point —
-    * catalog init, data-source instantiation, the registry wrapper — so
-    * whichever surface a user reaches graft through, scans report stats.
-    */
-  def install(spark: SparkSession): Unit = StatsPropagationRule.synchronized {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraOptimizations.contains(StatsPropagationRule)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ StatsPropagationRule
-    }
-    // The SQL DML strategy rides the same install points: anywhere graft
-    // scans can be planned, MERGE/UPDATE against them should plan too.
-    GraftMergeStrategy.install(spark)
-    // ...and so should the transparent materialized-view rewrite.
-    MvRewriteRule.install(spark)
   }
 }

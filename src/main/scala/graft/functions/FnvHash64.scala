@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * /root/reference/block.go:94-107); FNV-1a is the cheap rolling variant a
   * fingerprint pipeline uses when cryptographic strength isn't needed.
   *
-  * Registered as SQL function `fnv64` via [[GraftFunctions.register]].
+  * Registered as SQL function `fnv64` by [[GraftExtensions]].
   */
 case class FnvHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType

@@ -193,7 +193,6 @@ object Fns {
       // registry + LATERAL VIEW — the table-function tier of the extension
       // surface (fnv64 is the scalar tier, u1 the aggregate tier). One
       // JVM loop per document, no per-element interpreted lambdas.
-      graft.functions.GraftFunctions.register(s)
       Tables.table(s, d, "documents").createOrReplaceTempView("documents_u3")
       s.sql(
         """SELECT doc_id, g.pos, g.gram

@@ -234,7 +234,6 @@ object TextAnalysis {
     "t5_fnv_fingerprint" -> { (s, d) =>
       // Native codegen'd Catalyst expression (graft.functions.FnvHash64)
       // through the SQL function registry — the custom-Expression tier.
-      graft.functions.GraftFunctions.register(s)
       Tables.table(s, d, "documents").select(
         col("doc_id"),
         expr("fnv64(text)").as("fnv"),

@@ -141,19 +141,13 @@ object TopKPerKeyStrategy extends SparkStrategy {
 object TopK {
   /** Keep the top `k` rows per key group under `orderBy` — (column name,
     * descending?) pairs, best-first; include a unique tie-break column for
-    * a deterministic kept set. Installs [[TopKPerKeyStrategy]] into the
-    * session (idempotently); `spark.sql.extensions=graft.functions.
-    * GraftExtensions` does the same config-driven.
+    * a deterministic kept set. Plans through [[TopKPerKeyStrategy]], which
+    * `graft.functions.GraftExtensions` registers.
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderBy: Seq[(String, Boolean)],
              k: Int): DataFrame = {
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // Thread-safe idempotent install; in a session that ALSO configured
-    // GraftExtensions the strategy is present twice, which is benign —
-    // the planner takes the first matching candidate and both copies are
-    // the same object producing the same plan.
-    TopKRewriteRule.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute = {
       val matches = analyzed.output.filter(_.name == name)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -89,21 +88,5 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
       } yield f.copy(child =
         w.copy(child = TopKPerKeyNode(k, partSpec, orderSpec, pruneChild))))
         .getOrElse(f)
-  }
-
-  /** Install rule + strategy into a live session (idempotent, thread-safe) —
-    * the runtime equivalent of configuring
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
-    */
-  def install(spark: SparkSession): Unit = TopK.synchronized {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
-    if (!s.experimental.extraOptimizations.contains(TopKRewriteRule)) {
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ TopKRewriteRule
-    }
   }
 }

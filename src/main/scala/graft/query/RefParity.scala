@@ -694,7 +694,17 @@ object RefParity {
     wapSnapshotDir(s, sfDir)
     renameSnapshotDir(s, sfDir)
     catalogFor(s, sfDir)
+    catalogHpFor(s, sfDir)
+    catalogDefaultsFor(s, sfDir)
     catalogMergeFor(s, sfDir)
+    replaceWhereDir(s, sfDir)
+    incrementalFor(s, sfDir)
+    generatedFor(s, sfDir)
+    cloneFor(s, sfDir)
+    viewFor(s, sfDir)
+    mergeEvolveFor(s, sfDir)
+    replaceTableFor(s, sfDir)
+    widenDir(s, sfDir)
     avroOcfDir(s, sfDir)
     clusteredEventsDir(s, sfDir)
     lineageDir(s, sfDir)

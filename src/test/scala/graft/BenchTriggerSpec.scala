@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[Bench.regressionTrigger]] — the retest/regression gate whose
   * round-12 form (`prev >= 0.3` alone) let 40-60× blowups over sub-0.3 s
-  * priors pass unflagged. Pure-function spec, no Spark session.
+  * priors pass unflagged — and the stamped retest record. Pure-function
+  * spec, no Spark session.
   */
 class BenchTriggerSpec extends AnyFunSuite {
 
@@ -50,5 +51,18 @@ class BenchTriggerSpec extends AnyFunSuite {
     assert(!Bench.regressionTrigger(-1.0, 0.5))
     assert(!Bench.regressionTrigger(2.0, -1.0))
     assert(!Bench.regressionTrigger(2.0, 0.0))
+  }
+
+  test("BENCH_RETESTED.json is stamped with its sf and full-registry path") {
+    val triples = Bench.retestedJson(scala.collection.immutable.TreeMap(
+      "j10_scalar_subquery" -> ((0.947, 0.131, 1.25))))
+    val rec = Bench.retestedRecord("testdata/sf0.1", "BENCH_FULL.json", triples)
+    assert(rec.contains("\"sf\": \"testdata/sf0.1\""), rec)
+    assert(rec.contains("\"full_path\": \"BENCH_FULL.json\""), rec)
+    assert(rec.contains(
+      "\"j10_scalar_subquery\": {\"oneshot\": 0.947, \"retest\": 0.131, \"load\": 1.250}"), rec)
+    // a FULL_PATH=0 run (the x8 scaling sweep) says so itself
+    val off = Bench.retestedRecord("scale/x8", "0", Bench.retestedJson(Map.empty))
+    assert(off.contains("\"sf\": \"scale/x8\"") && off.contains("\"full_path\": \"0\""), off)
   }
 }

@@ -481,7 +481,6 @@ class CatalogSpec extends SparkSuite {
 
   test("catalog functions: cat.system.fnv64 / sample_keep from pure SQL") {
     // identical to the session-registered native expression by construction
-    graft.functions.GraftFunctions.register(spark)
     val viaCatalog = rows(s"SELECT $cat.system.fnv64('hello') AS h").head.head
     val viaNative = rows("SELECT fnv64('hello') AS h").head.head
     assert(viaCatalog === viaNative)
@@ -717,69 +716,53 @@ class CatalogSpec extends SparkSuite {
   }
 
   test("persisted views resolve from plain SQL (ResolveGraftViews)") {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.connector.catalog.{Identifier, ViewCatalog, ViewInfo}
-    // Resolution rules inject only at session construction (there is no
-    // post-hoc experimental hook like extraStrategies), so this test runs
-    // in its own extension-bearing session over the shared context — the
-    // same deployment shape as spark.sql.extensions=GraftExtensions.
-    val old = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.functions.GraftExtensions()(_))
-        .getOrCreate()
-      val wh = tmpDir("graft_viewsql_wh")
-      s2.conf.set("spark.sql.catalog.gvx", "graft.connector.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.gvx.warehouse", wh)
-      def rows2(sql: String): Seq[Seq[Any]] =
-        s2.sql(sql).collect().toSeq.map(_.toSeq)
-      s2.sql("CREATE NAMESPACE gvx.vs")
-      s2.sql("CREATE TABLE gvx.vs.t AS SELECT id, id % 3 AS g FROM range(30)")
-      val vc = s2.sessionState.catalogManager.catalog("gvx").asInstanceOf[ViewCatalog]
-      // schemaSql: a session-resolvable twin of the body, only to capture
-      // the schema at creation (the body itself may use names relative to
-      // the stored context, which plain analysis here can't resolve)
-      def mkView(name: String, sql: String, schemaSql: String,
-                 aliases: Array[String] = Array.empty): Unit = {
-        val schema = s2.sql(schemaSql).schema
-        vc.createView(new ViewInfo(Identifier.of(Array("vs"), name), sql,
-          "gvx", Array("vs"), schema, schema.fieldNames, aliases,
-          Array.empty, java.util.Collections.emptyMap()))
-      }
-      // RELATIVE references in the body re-qualify against the view's
-      // stored definition context, not the reader's current catalog
-      mkView("evens", "SELECT id, g FROM t WHERE id % 2 = 0",
-        "SELECT id, g FROM gvx.vs.t WHERE id % 2 = 0")
-      assert(rows2("SELECT count(*) FROM gvx.vs.evens").head === Seq(15L))
-      // views compose: join a view to its base table, and a view can read
-      // another view (fixed-point expansion)
-      assert(rows2(
-        """SELECT count(*) FROM gvx.vs.evens e
-          |JOIN gvx.vs.t t ON e.id = t.id""".stripMargin).head === Seq(15L))
-      mkView("evensq",
-        "SELECT g, count(*) AS n FROM gvx.vs.evens GROUP BY g",
-        "SELECT g, count(*) AS n FROM gvx.vs.t WHERE id % 2 = 0 GROUP BY g")
-      assert(rows2("SELECT sum(n) FROM gvx.vs.evensq").head === Seq(15L))
-      // a CTE name inside the body must NOT be captured by qualification
-      mkView("withcte",
-        "WITH t AS (SELECT 1 AS one) SELECT one FROM t",
-        "WITH t AS (SELECT 1 AS one) SELECT one FROM t")
-      assert(rows2("SELECT one FROM gvx.vs.withcte").head === Seq(1))
-      // stored positional column aliases apply (the `AS v(a, b)` form)
-      mkView("renamed", "SELECT id, g FROM t WHERE id < 3",
-        "SELECT id, g FROM gvx.vs.t WHERE id < 3",
-        aliases = Array("ident", "grp"))
-      assert(rows2("SELECT ident, grp FROM gvx.vs.renamed WHERE ident = 2").head ===
-        Seq(2L, 2L))
-      // view reflects base-table writes (definition evaluates per query)
-      s2.sql("INSERT INTO gvx.vs.t VALUES (100, 0)")
-      assert(rows2("SELECT count(*) FROM gvx.vs.evens").head === Seq(16L))
-    } finally {
-      SparkSession.setActiveSession(old)
-      SparkSession.setDefaultSession(old)
+    // Its own catalog over a fresh warehouse, on the shared session —
+    // whose GraftExtensions inject the resolution rule.
+    val wh = tmpDir("graft_viewsql_wh")
+    spark.conf.set("spark.sql.catalog.gvx", "graft.connector.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gvx.warehouse", wh)
+    spark.sql("CREATE NAMESPACE gvx.vs")
+    spark.sql("CREATE TABLE gvx.vs.t AS SELECT id, id % 3 AS g FROM range(30)")
+    val vc = spark.sessionState.catalogManager.catalog("gvx").asInstanceOf[ViewCatalog]
+    // schemaSql: a session-resolvable twin of the body, only to capture
+    // the schema at creation (the body itself may use names relative to
+    // the stored context, which plain analysis here can't resolve)
+    def mkView(name: String, sql: String, schemaSql: String,
+               aliases: Array[String] = Array.empty): Unit = {
+      val schema = spark.sql(schemaSql).schema
+      vc.createView(new ViewInfo(Identifier.of(Array("vs"), name), sql,
+        "gvx", Array("vs"), schema, schema.fieldNames, aliases,
+        Array.empty, java.util.Collections.emptyMap()))
     }
+    // RELATIVE references in the body re-qualify against the view's
+    // stored definition context, not the reader's current catalog
+    mkView("evens", "SELECT id, g FROM t WHERE id % 2 = 0",
+      "SELECT id, g FROM gvx.vs.t WHERE id % 2 = 0")
+    assert(rows("SELECT count(*) FROM gvx.vs.evens").head === Seq(15L))
+    // views compose: join a view to its base table, and a view can read
+    // another view (fixed-point expansion)
+    assert(rows(
+      """SELECT count(*) FROM gvx.vs.evens e
+        |JOIN gvx.vs.t t ON e.id = t.id""".stripMargin).head === Seq(15L))
+    mkView("evensq",
+      "SELECT g, count(*) AS n FROM gvx.vs.evens GROUP BY g",
+      "SELECT g, count(*) AS n FROM gvx.vs.t WHERE id % 2 = 0 GROUP BY g")
+    assert(rows("SELECT sum(n) FROM gvx.vs.evensq").head === Seq(15L))
+    // a CTE name inside the body must NOT be captured by qualification
+    mkView("withcte",
+      "WITH t AS (SELECT 1 AS one) SELECT one FROM t",
+      "WITH t AS (SELECT 1 AS one) SELECT one FROM t")
+    assert(rows("SELECT one FROM gvx.vs.withcte").head === Seq(1))
+    // stored positional column aliases apply (the `AS v(a, b)` form)
+    mkView("renamed", "SELECT id, g FROM t WHERE id < 3",
+      "SELECT id, g FROM gvx.vs.t WHERE id < 3",
+      aliases = Array("ident", "grp"))
+    assert(rows("SELECT ident, grp FROM gvx.vs.renamed WHERE ident = 2").head ===
+      Seq(2L, 2L))
+    // view reflects base-table writes (definition evaluates per query)
+    spark.sql("INSERT INTO gvx.vs.t VALUES (100, 0)")
+    assert(rows("SELECT count(*) FROM gvx.vs.evens").head === Seq(16L))
   }
 
   test("TIMESTAMP AS OF survives relocation: header commitTs beats mtimes") {

@@ -1,46 +1,37 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.ColumnBridge
+import graft.connector.{GraftMergeStrategy, MvRewriteRule, StatsPropagationRule}
+import graft.plans.TopKPerKeyStrategy
+import graft.ingest.Snapshots
 
 /** The config-driven extension path: a session built with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` must expose
-  * graft's native functions without any registration call.
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (the shared
+  * suite session, from `GraftSession.create`) must expose graft's native
+  * functions without any registration call.
   */
 class ExtensionsSpec extends SparkSuite {
 
-  test("GraftExtensions injects fnv64 into a fresh session") {
-    val old = spark // keep the shared session alive (same SparkContext)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // withExtensions is the programmatic form of
-      // --conf spark.sql.extensions=graft.functions.GraftExtensions
-      // (the config path instantiates this same class at context startup,
-      // which a suite sharing one SparkContext cannot re-trigger).
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.functions.GraftExtensions()(_))
-        .getOrCreate()
-      assert(s2 ne old, "expected a new session over the shared context")
-      val viaExt = s2.sql("SELECT fnv64('hello') AS h").collect().head.getLong(0)
-      // must equal the expression the explicit registration path produces
-      graft.functions.GraftFunctions.register(old)
-      val viaReg = old.sql("SELECT fnv64('hello') AS h").collect().head.getLong(0)
-      assert(viaExt === viaReg)
-      // the injected Generator works in LATERAL VIEW position too
-      val grams = s2.sql(
-        """SELECT g.pos, g.gram
-          |FROM VALUES ('The quick Brown fox') AS t(txt)
-          |LATERAL VIEW ngrams(txt, 3) g AS pos, gram""".stripMargin)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(grams === Seq((0L, "the quick brown"), (1L, "quick brown fox")))
-    } finally {
-      SparkSession.setActiveSession(old)
-      SparkSession.setDefaultSession(old)
-    }
+  test("GraftExtensions injects fnv64 and ngrams into the session") {
+    val viaSql = spark.sql("SELECT fnv64('hello') AS h").collect().head.getLong(0)
+    // must equal the FnvHash64 expression built directly
+    val viaExpr = spark.range(1).select(ColumnBridge.column(
+      graft.functions.FnvHash64(ColumnBridge.expression(lit("hello")))))
+      .collect().head.getLong(0)
+    assert(viaSql === viaExpr)
+    // the injected Generator works in LATERAL VIEW position too
+    val grams = spark.sql(
+      """SELECT g.pos, g.gram
+        |FROM VALUES ('The quick Brown fox') AS t(txt)
+        |LATERAL VIEW ngrams(txt, 3) g AS pos, gram""".stripMargin)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(grams === Seq((0L, "the quick brown"), (1L, "quick brown fox")))
   }
 
   test("ngrams generator edge cases: short input, null, n=1") {
-    graft.functions.GraftFunctions.register(spark)
     // fewer words than n → zero rows, not an error
     assert(spark.sql(
       "SELECT * FROM VALUES ('one two') t(x) LATERAL VIEW ngrams(x, 3) g AS p, w")
@@ -54,5 +45,33 @@ class ExtensionsSpec extends SparkSuite {
       "SELECT g.w FROM VALUES ('A b C') t(x) LATERAL VIEW ngrams(x, 1) g AS p, w")
       .collect().map(_.getString(0)).toSeq
     assert(uni === Seq("a", "b", "c"))
+  }
+
+  test("every graft rule is registered once, where it fires") {
+    val base = tmpDir("graft_rule_placement")
+    Snapshots.commit(spark, spark.range(100).toDF("id"), base)
+    def check(s: SparkSession): Unit = {
+      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val read = s.read.format("graft").load(base)
+      assert(read.count() === 100L)
+      SparkEntry.queries("q1_pricing_summary")(s, sf).collect()
+      val strategies = classic.sessionState.planner.strategies
+      assert(strategies.count(_ eq TopKPerKeyStrategy) === 1, strategies)
+      assert(strategies.count(_ eq GraftMergeStrategy) === 1, strategies)
+      // the two rules that match DataSourceV2ScanRelation run after the
+      // push-down batch builds it, in "User Provided Optimizers"
+      assert(classic.experimental.extraOptimizations ===
+        Seq(StatsPropagationRule, MvRewriteRule))
+      assert(classic.experimental.extraStrategies.isEmpty)
+      // ...where StatsPropagationRule fires: the scan reports manifest
+      // stats, not Spark's unknown-size default
+      val optimized = read.queryExecution.optimizedPlan
+      val scans = optimized.collect { case r: DataSourceV2ScanRelation =>
+        r.scan.getClass.getSimpleName }
+      assert(scans === Seq("StatsV1ScanWrapper"), optimized)
+      assert(optimized.stats.sizeInBytes < BigInt(1 << 20), optimized.stats)
+    }
+    check(spark)
+    check(spark.newSession())
   }
 }

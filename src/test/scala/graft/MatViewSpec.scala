@@ -303,7 +303,6 @@ class MatViewSpec extends SparkSuite {
     import graft.connector.MvRewriteRule
     val sess = spark
     import sess.implicits._
-    MvRewriteRule.install(spark)
     val root = tmpDir("graft_mv_rollup")
     val (src, mv) = (s"$root/src", s"$root/mv")
     Snapshots.commit(spark,
@@ -360,7 +359,6 @@ class MatViewSpec extends SparkSuite {
     import graft.connector.MvRewriteRule
     val sess = spark
     import sess.implicits._
-    MvRewriteRule.install(spark) // the suite session has no extensions conf
     val root = tmpDir("graft_mv_rw")
     val (src, mv) = (s"$root/src", s"$root/mv")
     Snapshots.commit(spark,

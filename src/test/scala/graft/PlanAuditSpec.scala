@@ -49,26 +49,8 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("no registered query plans an unintended cartesian / nested-loop join") {
-    // The audit session mirrors the deployment shape (Verify/Bench set
-    // spark.sql.extensions): some registered queries — vw1's persisted
-    // view read — need the injected resolution rules, which cannot be
-    // added to an already-built session.
-    val old = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val audit = try org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions()(_)).getOrCreate()
-    finally ()
-    try auditAll(audit)
-    finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(old)
-      org.apache.spark.sql.SparkSession.setDefaultSession(old)
-    }
-  }
-
-  private def auditAll(audit: org.apache.spark.sql.SparkSession): Unit = {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val df = fn(audit, sf)
+      val df = fn(spark, sf)
       df.collect() // finalize AQE
       val nodes = flatten(df.queryExecution.executedPlan)
       val cart = nodes.collect { case c: CartesianProductExec => c }

@@ -183,7 +183,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("w1: window top-k auto-rewrites to the bounded-heap operator") {
-    // TopKRewriteRule (installed for every SparkEntry query) must turn the
+    // TopKRewriteRule (injected by GraftExtensions) must turn the
     // row_number-filter idiom into partial→exchange→final TopKPerKeyExec,
     // with the Window retained above (for the rn column) over <= k rows
     // per key — so the exchange carries a keys-sized, not corpus-sized,

@@ -3,19 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM under Test/fork). */
+/** Shared session for all suites (one JVM under Test/fork): the same
+  * factory, and so the same extensions and rules, as Bench and Verify.
+  */
 object SparkSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // data-sized budget for depth-bounded WITH RECURSIVE (see Bench)
-      .config("spark.sql.cteRecursionRowLimit", "100000000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
+    // A static conf, so it goes in before the context starts: SparkConf
+    // reads `spark.*` system properties at construction.
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+    val s = GraftSession.create()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -54,7 +54,6 @@ class TopKSpec extends SparkSuite {
     // rn = 1, literal-on-left, and a conjunction with an unrelated
     // predicate — must produce the heap exec AND the exact rows of the
     // un-rewritten window formulation.
-    graft.plans.TopKRewriteRule.install(spark)
     val w = Window.partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     val ranked = graft.tables.Tables.table(spark, sf, "orders")
