@@ -7,7 +7,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 
@@ -27,14 +30,18 @@ import java.util.Base64
   * at block grain: its filename key range IS a one-column zone map,
   * /root/reference/block.go:29-47.)
   *
-  * Stats collection is footer reads of files this job just wrote — IO the
-  * page cache still holds — and the sidecar is one small file per batch
-  * dir, so commit cost grows with the batch's file count, never the
-  * table's. Pruning is CONSERVATIVE: a file is dropped only when its stats
-  * PROVE no row can match; missing sidecars (pre-stats trees), missing
-  * columns (post-rename files record the old name), and filter shapes the
-  * evaluator doesn't model all keep the file. Correctness never depends on
-  * a stat — the full predicate still runs on every surviving row.
+  * Stats are collected in the write job itself: the NDV sketches and
+  * histogram counts per file as its rows are written ([[FileSketch]]
+  * inside [[WriteStats]]), min/max/null counts from the footers the job
+  * just wrote. A commit's data write is therefore ONE Spark job (plus one
+  * per CHECK constraint), with no opt-out because nothing is re-read; the
+  * sidecar is one small file per batch dir, so commit cost grows with
+  * the batch's file count, never the table's. Pruning is CONSERVATIVE: a
+  * file is dropped only when its stats PROVE no row can match; missing
+  * sidecars (pre-stats trees), missing columns (post-rename files record
+  * the old name), and filter shapes the evaluator doesn't model all keep
+  * the file. Correctness never depends on a stat — the full predicate
+  * still runs on every surviving row.
   */
 object FileStats {
 
@@ -62,8 +69,8 @@ object FileStats {
     * which is what lets scan statistics report distinct counts to
     * Catalyst's CBO for join/aggregate cardinality estimation (Iceberg's
     * manifests carry the same idea as theta sketches in its stats files).
-    * Absent for files written before round 9 or with collection disabled;
-    * every consumer treats absence as "unknown".
+    * Absent for files no graft write job produced (until `collect_stats`
+    * backfills them); every consumer treats absence as "unknown".
     */
   /** `hist`: per-column signed-log2 bucket counts of the file's non-null
     * values (integer comparison domains only: ints, dates as epoch days,
@@ -81,7 +88,7 @@ object FileStats {
                       hist: Map[String, Map[Int, Long]] = Map.empty)
 
   // -------------------------------------------------------------------
-  // Collection (commit-time, driver-side, just-written files)
+  // Footer stats and the sidecar (commit-time, driver-side)
   // -------------------------------------------------------------------
 
   private def b64(s: String) = Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
@@ -188,13 +195,15 @@ object FileStats {
     }
 
   /** Collect stats for `files` (absolute paths, same directory) and write
-    * the sidecar into `dir`. Failures are swallowed file-by-file: a stats
-    * sidecar is an optimization, never a correctness dependency, so a
-    * commit must not fail because a footer read did.
+    * the sidecar into `dir`: min/max/null counts from the footers, plus
+    * the `n`/`h` lines of `sketches` (file name → the [[FileSketch]]
+    * result built while the file was written, or by [[sketchFiles]]).
+    * Failures are swallowed file-by-file: a stats sidecar is an
+    * optimization, never a correctness dependency, so a commit must not
+    * fail because a footer read did.
     */
   def writeSidecar(conf: Configuration, dir: Path, files: Seq[String],
-                   ndv: Map[String, Map[String, Array[Byte]]] = Map.empty,
-                   hist: Map[String, Map[String, Map[Int, Long]]] = Map.empty): Unit =
+                   sketches: Map[String, FileStat] = Map.empty): Unit =
     try {
       val stats = files.flatMap { f =>
         val p = new Path(f)
@@ -203,6 +212,7 @@ object FileStats {
       if (stats.nonEmpty) {
         val sb = new StringBuilder
         for ((name, fs) <- stats.sortBy(_._1)) {
+          val sk = sketches.get(name)
           sb.append(s"f\t${b64(name)}\t${fs.rows}\n")
           // trailing field-id column (round 10) — pre-round-10 readers
           // split on exactly 7 fields and skip 8-field lines, degrading
@@ -213,12 +223,12 @@ object FileStats {
               s"${c.id.map(_.toString).getOrElse("-")}\n")
           // `n` lines are ignored by pre-round-9 readers (unknown tags
           // skip), so the sidecar format stays forward/backward compatible
-          for ((cn, sk) <- ndv.getOrElse(name, Map.empty).toSeq.sortBy(_._1))
+          for ((cn, bytes) <- sk.map(_.ndv).getOrElse(Map.empty).toSeq.sortBy(_._1))
             sb.append(s"n\t${b64(name)}\t${b64(cn)}\t" +
-              Base64.getEncoder.encodeToString(sk) + "\n")
+              Base64.getEncoder.encodeToString(bytes) + "\n")
           // `h` lines (round 10): signed-log2 bucket counts, same
           // unknown-tag forward compatibility as `n`
-          for ((cn, bs) <- hist.getOrElse(name, Map.empty).toSeq.sortBy(_._1))
+          for ((cn, bs) <- sk.map(_.hist).getOrElse(Map.empty).toSeq.sortBy(_._1))
             sb.append(s"h\t${b64(name)}\t${b64(cn)}\t" +
               bs.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString(",") + "\n")
         }
@@ -228,99 +238,154 @@ object FileStats {
       }
     } catch { case _: Exception => () }
 
-  /** Per-file, per-column HLL sketches of a just-written batch, computed
-    * as ONE distributed aggregate grouped by file (commit-time cost: a
-    * columnar re-read of data this job just wrote — page-cache-warm, the
-    * price Iceberg pays for its NDV stats too). Only exactly-hashable
-    * domains participate: integers, strings, dates (cast to day number),
-    * micros timestamps (cast to long) — doubles are NaN/-0.0-hostile and
-    * deliberately absent, matching the min/max domains' stance. Returns
-    * fileName -> column -> sketch bytes; best-effort (empty on failure).
-    */
-  def collectNdv(spark: org.apache.spark.sql.SparkSession,
-                 files: Seq[String]): Map[String, Map[String, Array[Byte]]] =
-    try {
-      import org.apache.spark.sql.functions.{col, hll_sketch_agg, input_file_name}
-      import org.apache.spark.sql.types._
-      val df = spark.read.parquet(files: _*)
-      val eligible = df.schema.fields.flatMap { f =>
-        f.dataType match {
-          case ByteType | ShortType | IntegerType => Some(f.name -> col(quote(f.name)).cast("int"))
-          case LongType                           => Some(f.name -> col(quote(f.name)))
-          case StringType                         => Some(f.name -> col(quote(f.name)))
-          case DateType                           => Some(f.name -> col(quote(f.name)).cast("int"))
-          case TimestampType                      => Some(f.name -> col(quote(f.name)).cast("long"))
-          case _                                  => None
-        }
-      }.toSeq
-      if (eligible.isEmpty) Map.empty
-      else {
-        val aggs = eligible.map { case (n, c) => hll_sketch_agg(c).as(n) }
-        df.groupBy(input_file_name().as("__file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val name = new Path(r.getString(0)).getName
-            name -> eligible.indices.flatMap { i =>
-              Option(r.get(i + 1)).map(b => eligible(i)._1 -> b.asInstanceOf[Array[Byte]])
-            }.toMap
-          }.toMap
-      }
-    } catch { case _: Exception => Map.empty }
+  // -------------------------------------------------------------------
+  // Sketches (per file, while its rows stream past)
+  // -------------------------------------------------------------------
 
-  /** Per-file, per-column signed-log2 bucket counts of a just-written
-    * batch — ONE distributed aggregate: integer-domain columns are
-    * stacked into (column, bucket) pairs and counted grouped by file.
-    * Buckets: 0 for zero, floor(log2(v))+1 for positives, mirrored
-    * negatives; Long.MinValue (whose negation overflows) is dropped —
-    * counts feed ESTIMATES only. Best-effort (empty on failure), same
-    * stance as [[collectNdv]].
+  /** Spark's `hll_sketch_agg` defaults: every sketch in every sidecar has
+    * the same shape, so any set of them unions cleanly.
     */
-  def collectHistograms(spark: org.apache.spark.sql.SparkSession,
-                        files: Seq[String]): Map[String, Map[String, Map[Int, Long]]] =
+  private val LgK = 12
+  private val HllType = org.apache.datasketches.hll.TgtHllType.HLL_8
+
+  /** The value of an integer-domain column as a long: ints, dates (epoch
+    * days) and timestamps (epoch MICROS — the domain of the `ts` min/max
+    * and of Catalyst's histogram-based estimation, so a distinct micro
+    * counts as a distinct value). None for every other type. Sidecars
+    * written before sketches moved into the write job hold epoch-SECONDS
+    * timestamp sketches; merged with micros ones they overestimate (the
+    * safe direction for NDV), and they stay until the batch is rewritten.
+    */
+  private def longReader(dt: DataType): Option[(InternalRow, Int) => Long] = dt match {
+    case ByteType                 => Some((r, i) => r.getByte(i).toLong)
+    case ShortType                => Some((r, i) => r.getShort(i).toLong)
+    case IntegerType | DateType   => Some((r, i) => r.getInt(i).toLong)
+    case LongType | TimestampType => Some((r, i) => r.getLong(i))
+    case _                        => None
+  }
+
+  /** Signed-log2 bucket of `v`: 0 for zero, floor(log2(v))+1 for
+    * positives, mirrored for negatives. Computed through a double log2
+    * (`StrictMath.log(v) / StrictMath.log(2)`, Spark's `log2`), which
+    * every sidecar written so far used — an exact integer log would move
+    * values within a few ulps below 2^k one bucket down.
+    */
+  private[ingest] def log2Bucket(v: Long): Int = {
+    def fl(x: Long) = math.floor(StrictMath.log(x.toDouble) / StrictMath.log(2)).toLong
+    if (v == 0L) 0 else if (v > 0L) (fl(v) + 1).toInt else (-fl(-v) - 1).toInt
+  }
+
+  /** The accumulators behind one file's `n` and `h` lines, fed one row of
+    * `schema` at a time. Sketched (`n`): integer domains ([[longReader]])
+    * and strings (their UTF-8 bytes) — the exactly-hashable domains;
+    * doubles are NaN/-0.0-hostile and absent, matching the min/max
+    * stance. Counted (`h`): the integer domains. Every sketched column
+    * gets a sketch once the file has a row (an all-NULL column's is
+    * empty); a column gets counts only once it has a counted value.
+    * Long.MinValue, whose negation overflows, is not counted — counts
+    * feed ESTIMATES only.
+    */
+  final class FileSketch(schema: StructType) {
+    import org.apache.datasketches.hll.HllSketch
+    private val longs = schema.fields.zipWithIndex.flatMap { case (f, i) =>
+      longReader(f.dataType).map(rd => (f.name, i, rd))
+    }
+    private val strings = schema.fields.zipWithIndex.collect {
+      case (f, i) if f.dataType == StringType => (f.name, i)
+    }
+    private val longSketches = longs.map(_ => new HllSketch(LgK, HllType))
+    private val stringSketches = strings.map(_ => new HllSketch(LgK, HllType))
+    // bucket b at index b + 64: every long's bucket lies in [-64, 64]
+    private val counts = longs.map(_ => new Array[Long](129))
+    private var rows = 0L
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      var k = 0
+      while (k < longs.length) {
+        val i = longs(k)._2
+        if (!row.isNullAt(i)) {
+          val v = longs(k)._3(row, i)
+          longSketches(k).update(v)
+          if (v != Long.MinValue) counts(k)(log2Bucket(v) + 64) += 1
+        }
+        k += 1
+      }
+      k = 0
+      while (k < strings.length) {
+        val i = strings(k)._2
+        if (!row.isNullAt(i)) stringSketches(k).update(row.getUTF8String(i).getBytes)
+        k += 1
+      }
+    }
+
+    /** Rows seen and the `n`/`h` payloads, as a [[FileStat]] without min/max. */
+    def result: FileStat = {
+      // Through a Union, as `hll_sketch_agg`'s final merge does: the same
+      // rows in the same order give the same bytes and the same estimate.
+      def bytes(sk: HllSketch): Array[Byte] = {
+        val u = new org.apache.datasketches.hll.Union(LgK)
+        u.update(sk)
+        u.getResult(HllType).toUpdatableByteArray
+      }
+      val ndv =
+        if (rows == 0L) Map.empty[String, Array[Byte]]
+        else (longs.map(_._1).zip(longSketches) ++ strings.map(_._1).zip(stringSketches))
+          .map { case (n, sk) => n -> bytes(sk) }.toMap
+      val hist = longs.map(_._1).zip(counts).collect {
+        case (n, c) if c.exists(_ > 0) =>
+          n -> c.indices.collect { case i if c(i) > 0 => (i - 64) -> c(i) }.toMap
+      }.toMap
+      FileStat(rows, Map.empty, ndv, hist)
+    }
+  }
+
+  /** Combine two partial results for the same file (a file the backfill
+    * read as several splits): sketches union, counts add.
+    */
+  private def mergeSketches(a: FileStat, b: FileStat): FileStat = {
+    import org.apache.datasketches.hll.{HllSketch, Union}
+    val ndv = (a.ndv.keySet ++ b.ndv.keySet).map { c =>
+      val u = new Union(LgK)
+      (a.ndv.get(c) ++ b.ndv.get(c)).foreach(bs => u.update(HllSketch.heapify(bs)))
+      c -> u.getResult(HllType).toUpdatableByteArray
+    }.toMap
+    val hist = (a.hist.keySet ++ b.hist.keySet).map { c =>
+      val (x, y) = (a.hist.getOrElse(c, Map.empty), b.hist.getOrElse(c, Map.empty))
+      c -> (x.keySet ++ y.keySet).map(k => k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
+    }.toMap
+    FileStat(a.rows + b.rows, Map.empty, ndv, hist)
+  }
+
+  /** [[FileSketch]] results for files already on disk (the `collect_stats`
+    * backfill): ONE pass over `files` — a schema read, then one job that
+    * feeds each row to its file's accumulators. Written batches never
+    * come here; they get theirs from the write job ([[WriteStats]]).
+    * Returns file name → result; best-effort (empty on failure).
+    */
+  def sketchFiles(spark: org.apache.spark.sql.SparkSession,
+                  files: Seq[String]): Map[String, FileStat] =
     try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types._
+      import org.apache.spark.sql.functions.col
       val df = spark.read.parquet(files: _*)
-      val eligible = df.schema.fields.flatMap { f =>
-        f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType =>
-            Some(f.name -> col(FileStats.quote(f.name)).cast("long"))
-          case DateType =>
-            Some(f.name -> col(FileStats.quote(f.name)).cast("int").cast("long"))
-          case TimestampType =>
-            // MICROS, not cast("long")'s epoch seconds: Catalyst's
-            // histogram-based filter estimation compares the column's
-            // internal micros domain (the same domain the sidecar
-            // min/max "ts" stats use) — a seconds-domain histogram
-            // mis-scales timestamp range selectivity by 1e6. Sidecars
-            // written before this fix contribute seconds-domain bucket
-            // counts to merged estimates until refreshed
-            // (CALL collect_stats); estimates only, never results.
-            Some(f.name -> unix_micros(col(FileStats.quote(f.name))))
-          case _ => None
+      val schema = df.schema
+      val nameAt = schema.length
+      val withName = df.select(
+        schema.fieldNames.map(n => col(quote(n))).toSeq :+ col("_metadata.file_name"): _*)
+      org.apache.spark.sql.graft.Bridge.toRdd(withName).mapPartitions { rows =>
+        val accs = scala.collection.mutable.LinkedHashMap[String, FileSketch]()
+        var last: UTF8String = null
+        var acc: FileSketch = null
+        rows.foreach { r =>
+          val name = r.getUTF8String(nameAt)
+          if (last == null || last != name) {
+            last = name.clone()
+            acc = accs.getOrElseUpdate(name.toString, new FileSketch(schema))
+          }
+          acc.add(r)
         }
-      }.toSeq
-      if (eligible.isEmpty) return Map.empty
-      def bucket(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        when(v.isNull || v === Long.MinValue, lit(null))
-          .when(v === 0L, lit(0))
-          .when(v > 0L, (floor(log2(v)) + lit(1)).cast("int"))
-          .otherwise((-floor(log2(-v)) - lit(1)).cast("int"))
-      val pairs = eligible.map { case (n, c) =>
-        struct(lit(n).as("c"), bucket(c).as("b"))
-      }
-      val counts = df
-        .select(input_file_name().as("f"), explode(array(pairs: _*)).as("p"))
-        .filter(col("p.b").isNotNull)
-        .groupBy(col("f"), col("p.c").as("c"), col("p.b").as("b"))
-        .count()
-        .collect()
-      counts.groupBy(r => new Path(r.getString(0)).getName).map { case (file, rs) =>
-        file -> rs.groupBy(_.getString(1)).map { case (c, brs) =>
-          c -> brs.map(r => r.getInt(2) -> r.getLong(3)).toMap
-        }
-      }
+        accs.iterator.map { case (n, a) => n -> a.result }
+      }.collect().groupMapReduce(_._1)(_._2)(mergeSketches)
     } catch { case _: Exception => Map.empty }
 
   private def quote(n: String): String = s"`${n.replace("`", "``")}`"

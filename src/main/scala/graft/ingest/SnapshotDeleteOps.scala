@@ -139,7 +139,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     // DV-deleted must not be re-matched (a cond hitting only such rows is
     // a no-op, not a new version). ONE scan: coordinates are written
     // straight out, and the emptiness check + referenced-file list come
-    // from the written (KB-scale) sidecar, never a target re-scan.
+    // from that write job ([[writeVector]]), never a re-read.
     // The scan plans only files whose footer stats admit `cond` (the
     // readWhere translation): a selective delete on a clustered column
     // costs a neighborhood scan, not a table scan. Pure optimization —
@@ -155,20 +155,10 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     val matches = matchScan
       .filter(cond)
       .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos"))
-    val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    matches.write.parquet(dvPath.toString)
-    val newDvs = listParquet(spark, dvPath)
-    // Files this vector references — for the conflict check below.
-    val referenced = spark.read.parquet(newDvs: _*)
-      .select("dv_file").distinct().collect().map(_.getString(0)).toSet
-    // No-op delete: publish nothing, and remove the staged (empty) vector
-    // dir eagerly — it is unreferenced, so nothing else ever would, and
-    // expire's sweep only reclaims .parquet files, leaving empty dirs to
-    // accumulate across repeated no-op deletes.
-    if (referenced.isEmpty) {
-      fsFor(base).delete(dvPath, true)
-      return v0
-    }
+    // `referenced`: the files this vector points at, for the conflict
+    // check below. No-op delete (empty vector): publish nothing.
+    val (newDvs, referenced) = writeVector(matches, base)
+    if (newDvs.isEmpty) return v0
     publish(base, Nil, newDvs, mode = "delete-dv", parent =>
       if (parent == v0) (m.files, m.dvs, m.eqs)
       else {
@@ -264,19 +254,10 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
       if (kept.isEmpty && m.files.nonEmpty)
         scanWithDvs(spark, m, keepCoords = true).filter(lit(false))
       else scanWithDvs(spark, m.copy(files = kept), keepCoords = true)
-    val dvPath = new Path(dataDir(base),
-      s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    matchScan.filter(cond)
-      .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos"))
-      .write.parquet(dvPath.toString)
-    val staged = listParquet(spark, dvPath)
-    val referenced = spark.read.parquet(staged: _*)
-      .select("dv_file").distinct().collect().map(_.getString(0)).toSet
     // An empty vector (nothing matched — first run of a backfill into
     // fresh territory) adds nothing: publish the append alone.
-    val newDvs =
-      if (referenced.isEmpty) { fsFor(base).delete(dvPath, true); Nil }
-      else staged
+    val (newDvs, referenced) = writeVector(matchScan.filter(cond)
+      .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos")), base)
     publish(base, newFiles, newDvs, mode = "replace-where", parent =>
       if (parent == 0) (Nil, Nil, Nil)
       else if (parent == v0) (m.files, m.dvs, m.eqs)
@@ -509,14 +490,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     }.reduce(_.unionByName(_))
       .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos"))
       .dropDuplicates("dv_file", "dv_pos")
-    val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    hidden.write.parquet(dvPath.toString)
-    val written = listParquet(spark, dvPath)
-    val referenced = spark.read.parquet(written: _*)
-      .select("dv_file").distinct().collect().map(_.getString(0)).toSet
-    val newDvs =
-      if (referenced.isEmpty) { fsFor(base).delete(dvPath, true); Nil }
-      else written
+    val (newDvs, _) = writeVector(hidden, base)
     publish(base, Nil, newDvs, mode = "eq-convert", parent =>
       if (parent == v0) (m.files, m.dvs, Nil)
       else {
@@ -703,8 +677,8 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     // DV-delete leg. left_semi keeps the scan side's columns only, so the
     // projection is (coords + keys) — column pruning drops the rest. ONE
     // scan: the coordinate set is written first, and the emptiness check
-    // and referenced-file list both come from the written (KB-scale)
-    // sidecar, never from re-running the target scan.
+    // and referenced-file list both come from that write job
+    // ([[writeVector]]), never from re-running the target scan.
     //
     // The scan is RUNTIME-PRUNED by the source's key envelope
     // ([[FileStats.keyFilters]]): on a key-clustered table, a batch-sized
@@ -729,16 +703,9 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     val matched = matchedScan
       .join(srcKeys, keyCols, "left_semi")
       .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos"))
-    val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    matched.write.parquet(dvPath.toString)
-    val written = listParquet(spark, dvPath)
-    val referenced = spark.read.parquet(written: _*)
-      .select("dv_file").distinct().collect().map(_.getString(0)).toSet
     // An insert-only merge (no matched keys) drops its empty vector dir
     // eagerly, same as a no-op DV delete.
-    val newDvs =
-      if (referenced.isEmpty) { fsFor(base).delete(dvPath, true); Nil }
-      else written
+    val (newDvs, referenced) = writeVector(matched, base)
     // The insert leg: the whole source (updates are delete+insert).
     val newFiles = writeBatch(src, base, keyCols, checkNewData = true)
     beforePublish()

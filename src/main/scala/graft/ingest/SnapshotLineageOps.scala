@@ -267,16 +267,8 @@ trait SnapshotLineageOps { self: Snapshots.type =>
         case None => ins
       }
     }
-    val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    deleteCoords
-      .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos"))
-      .write.parquet(dvPath.toString)
-    val written = listParquet(spark, dvPath)
-    val referenced = spark.read.parquet(written: _*)
-      .select("dv_file").distinct().collect().map(_.getString(0)).toSet
-    val newDvs =
-      if (referenced.isEmpty) { fsFor(base).delete(dvPath, true); Nil }
-      else written
+    val (newDvs, referenced) = writeVector(deleteCoords
+      .select(col(DvFileCol).as("dv_file"), col(DvPosCol).as("dv_pos")), base)
     val newFiles = aligned.map(writeBatch(_, base, Nil, checkNewData = true)).getOrElse(Nil)
     if (newDvs.isEmpty && newFiles.isEmpty) return fromVersion // full no-op
     publish(base, newFiles, newDvs,

@@ -268,63 +268,66 @@ trait SnapshotMetaOps { self: Snapshots.type =>
     }
   }
 
-  /** Write `df`'s files under a fresh uncommitted batch dir.
+  /** Write `df` as Parquet into the fresh dir `dir` — one write job, after
+    * whatever shuffle stages `df`'s own plan needs — with `stats`
+    * observing every written row ([[WriteStats]]). Field ids
+    * ride the df's schema metadata into the parquet footers (default-on
+    * in Spark, pinned here because id-tracked tables DEPEND on every data
+    * file carrying ids).
+    *
+    * Table-format physical encoding: timestamps are INT64 micros (the
+    * Iceberg spec's choice), never legacy INT96 — INT96 carries no usable
+    * footer stats, so it would silently disable both row-group skipping
+    * and [[FileStats]] planning-time pruning on time columns. SCOPED to
+    * this write (save/restore): leaking it session-wide would change the
+    * encoding of every unrelated parquet write on the session. A racing
+    * writer that sees the restored value merely writes INT96 — stats
+    * absent for its ts columns, pruning conservative, rows correct.
+    */
+  private[ingest] def writeFiles(df: DataFrame, dir: Path, stats: WriteStats): WriteStats.Result = {
+    val conf = df.sparkSession.conf
+    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val prevTs = conf.getOption(tsKey)
+    conf.set(tsKey, "TIMESTAMP_MICROS")
+    try org.apache.spark.sql.graft.Bridge.writeParquet(df, dir.toString, stats)
+    finally prevTs match {
+      case Some(v) => conf.set(tsKey, v)
+      case None    => conf.unset(tsKey)
+    }
+    stats.result
+  }
+
+  /** Write `df`'s files under a fresh uncommitted batch dir, with their
+    * stats sidecar, in ONE write job: the HLL sketches and log2
+    * histogram counts are built per file as the rows are written
+    * ([[WriteStats]]), and min/max/null counts come from the footers.
+    * Stats collection has no opt-out because it costs no extra pass.
     * `checkNewData = true` (every new-data path) validates the written
     * files against the table's CHECK constraints before returning —
     * a violation deletes the batch and throws, so nothing reaches
-    * publish; maintenance rewrites pass false.
+    * publish; maintenance rewrites pass false. Each CHECK re-reads the
+    * batch (at least one more job per constraint).
     */
   private[ingest] def writeBatch(df: DataFrame, base: String, sortCols: Seq[String],
                          checkNewData: Boolean = false): Seq[String] = {
     val batchId = java.util.UUID.randomUUID().toString.take(8)
     val batchPath = new Path(dataDir(base), s"b_$batchId")
-    // Field ids ride the df's schema metadata into the parquet footers
-    // (default-on in Spark, pinned here because id-tracked tables DEPEND
-    // on every data file carrying ids).
-    df.sparkSession.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    // Table-format physical encoding: timestamps are INT64 micros (the
-    // Iceberg spec's choice), never legacy INT96 — INT96 carries no
-    // usable footer stats, so it would silently disable both row-group
-    // skipping and [[FileStats]] planning-time pruning on time columns.
-    // SCOPED to this write (save/restore): leaking it session-wide would
-    // change the encoding of every unrelated parquet write on the session.
-    // A racing writer that sees the restored value merely writes INT96 —
-    // stats absent for its ts columns, pruning conservative, rows correct.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = df.sparkSession.conf.getOption(tsKey)
-    df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
     val clustered =
       if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(col): _*) else df
-    try clustered.write.parquet(batchPath.toString)
-    finally prevTs match {
-      case Some(v) => df.sparkSession.conf.set(tsKey, v)
-      case None    => df.sparkSession.conf.unset(tsKey)
-    }
+    val written = writeFiles(clustered, batchPath, new WriteStats(clustered.schema, sketch = true))
     val files = listParquet(df.sparkSession, batchPath)
     if (checkNewData) {
       try enforceChecks(df.sparkSession, base, files)
       catch { case e: Throwable => fsFor(base).delete(batchPath, true); throw e }
     }
-    // Commit-time footer stats → batch-dir sidecar, so filtered reads
-    // ([[readWhere]], the `graft` connector) prune files at PLANNING time.
+    // Commit-time stats → batch-dir sidecar, so filtered reads
+    // ([[readWhere]], the `graft` connector) prune files at PLANNING time
+    // and the connector reports NDV and histograms to the CBO.
     // Best-effort by design: a failed footer read costs pruning power,
-    // never the commit. NDV sketches ride the same sidecar (one columnar
-    // re-read of the just-written batch — `spark.graft.stats.ndv false`
-    // opts a latency-critical ingest out; everything degrades to the
-    // pre-NDV behavior).
-    val ndv =
-      if (runtimeConf("spark.graft.stats.ndv", "true").toBoolean)
-        FileStats.collectNdv(df.sparkSession, files)
-      else Map.empty[String, Map[String, Array[Byte]]]
-    // Signed-log2 histogram counts ride beside the NDV sketches
-    // (`spark.graft.stats.histograms false` opts out) — they are what
-    // lets CBO range selectivity see skew instead of assuming uniformity.
-    val hist =
-      if (runtimeConf("spark.graft.stats.histograms", "true").toBoolean)
-        FileStats.collectHistograms(df.sparkSession, files)
-      else Map.empty[String, Map[String, Map[Int, Long]]]
+    // never the commit.
     FileStats.writeSidecar(df.sparkSession.sparkContext.hadoopConfiguration,
-      batchPath, files, ndv, hist)
+      batchPath, files, written.files)
     // Row-lineage assignment (when the table opted in): frames carrying a
     // physical `_row_id` (compaction/merge rewrites) ride their bytes;
     // everything else gets a metadata range per file — footer reads plus
@@ -333,5 +336,21 @@ trait SnapshotMetaOps { self: Snapshots.type =>
     if (!df.columns.contains(RowIdCol) && rowLineageEnabled(base))
       assignRowIdRanges(base, files)
     files
+  }
+
+  /** Stage a deletion vector — `dv`'s (`dv_file`, `dv_pos`) coordinates —
+    * under a fresh `dv_` dir; the write job itself reports the data files
+    * the vector references. Returns (vector files, referenced
+    * rel keys). A vector with no row adds nothing: its dir is removed at
+    * once (it is unreferenced, so nothing else ever would, and expire's
+    * sweep only reclaims .parquet files, leaving empty dirs to accumulate
+    * across repeated no-op deletes) and both results are empty.
+    */
+  private[ingest] def writeVector(dv: DataFrame, base: String): (Seq[String], Set[String]) = {
+    val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
+    val written = writeFiles(dv, dvPath,
+      new WriteStats(dv.schema, sketch = false, distinctOf = Some("dv_file")))
+    if (written.rows == 0L) { fsFor(base).delete(dvPath, true); (Nil, Set.empty) }
+    else (listParquet(dv.sparkSession, dvPath), written.distinct)
   }
 }

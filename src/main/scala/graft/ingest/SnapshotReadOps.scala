@@ -119,13 +119,16 @@ trait SnapshotReadOps { self: Snapshots.type =>
     (bytes, if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None)
   }
 
-  /** Backfill/refresh stats sidecars (min/max/null-count AND the r9 NDV
-    * sketches) for the live file set's batch dirs — the ANALYZE-equivalent
-    * for tables whose data predates stats collection: legacy trees,
-    * `spark.graft.stats.ndv false` ingests, and (opt-in) adopted foreign
-    * directories. A dir rewrites only when some live file lacks a sidecar
-    * entry or its NDV sketch, so re-running is cheap; managed dirs cover
-    * every parquet they hold (other versions' files share the sidecar),
+  /** Backfill/refresh stats sidecars (min/max/null-count, the NDV
+    * sketches and the histogram counts) for the live file set's batch
+    * dirs — the ANALYZE-equivalent for data no graft write job produced:
+    * legacy trees, batches written before sketches existed, and (opt-in)
+    * adopted foreign directories. A dir costs one pass over its files
+    * ([[FileStats.sketchFiles]]: the per-file accumulators a write job
+    * uses, fed by a read). A dir rewrites only when some live file lacks
+    * a sidecar entry or its NDV sketch, so re-running is cheap; managed
+    * dirs cover every parquet they hold (other versions' files share the
+    * sidecar),
     * foreign dirs (`includeForeign = true` — it writes a hidden sidecar
     * file into the producer's directory, which strict adopt-only
     * deployments may not want) cover only the manifest's files. Returns
@@ -153,9 +156,7 @@ trait SnapshotReadOps { self: Snapshots.type =>
                 .filter(_.getPath.getName.endsWith(".parquet"))
                 .map(_.getPath.toString).sorted
             else files.sorted
-          FileStats.writeSidecar(conf, dir, covered,
-            FileStats.collectNdv(spark, covered),
-            FileStats.collectHistograms(spark, covered))
+          FileStats.writeSidecar(conf, dir, covered, FileStats.sketchFiles(spark, covered))
           refreshed += 1
         }
       }

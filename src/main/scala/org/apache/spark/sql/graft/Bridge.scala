@@ -80,6 +80,42 @@ object Bridge {
       classic.queryExecution.toRdd, classic.schema, isStreaming = false)
   }
 
+  /** Write `df` as Parquet files into the fresh directory `path` — the job
+    * `df.write.parquet(path)` runs (same file format, commit protocol,
+    * session settings and Spark's basic write-stats tracker, under its own
+    * SQL execution id), with `tracker` also seeing every written row. The
+    * public writer has no way to attach a tracker; Delta writes its files
+    * through the same internal call.
+    */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, path: String,
+                   tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker): Unit = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.util.SerializableConfiguration
+    val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    val options = Map("path" -> path)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString, outputPath = path)
+    val basic = new BasicWriteJobStatsTracker(
+      new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)
+    SQLExecution.withNewExecutionId(qe, Some(s"parquet $path")) {
+      FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, qe.optimizedPlan.output), hadoopConf,
+        partitionColumns = Nil, bucketSpec = None, statsTrackers = Seq(basic, tracker),
+        options = options)
+    }
+  }
+
+  /** `df`'s rows as the engine's internal row RDD. */
+  def toRdd(df: org.apache.spark.sql.DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[Dataset[org.apache.spark.sql.Row]].queryExecution.toRdd
+
   /** V1 streaming offsets for a monotone long (snapshot version). The
     * engine hands back a [[SerializedOffset]] after a checkpoint restart —
     * both shapes must parse.

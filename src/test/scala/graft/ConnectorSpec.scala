@@ -18,6 +18,21 @@ class ConnectorSpec extends SparkSuite {
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select(col("id")).collect().map(_.getLong(0)).toSet
 
+  /** Rewrite the batch sidecars of `base`'s live files without their NDV
+    * sketches (`ndv`) or histogram counts (`hist`): a twin whose only
+    * difference from a normally written table is the stats the connector
+    * reports. Min/max and the other kind of sketch stay.
+    */
+  private def dropSketches(base: String, ndv: Boolean = false, hist: Boolean = false): Unit =
+    Snapshots.liveFiles(base, Snapshots.versions(base).max)
+      .groupBy(f => new Path(f).getParent).foreach { case (dir, files) =>
+        val kept = FileStats.readSidecar(conf, dir).getOrElse(Map.empty).map { case (f, st) =>
+          f -> st.copy(ndv = if (ndv) Map.empty else st.ndv,
+            hist = if (hist) Map.empty else st.hist)
+        }
+        FileStats.writeSidecar(conf, dir, files, kept)
+      }
+
   /** Three single-file commits with disjoint id ranges [1,10] [11,20]
     * [21,30]; returns (base, files ascending by range).
     */
@@ -673,9 +688,8 @@ class ConnectorSpec extends SparkSuite {
     val data = spark.range(4000)
       .select(col("id").as("k"), (col("id") % 3).as("g"))
     Snapshots.commit(spark, data, withNdv)
-    spark.conf.set("spark.graft.stats.ndv", "false")
-    try Snapshots.commit(spark, data, noNdv)
-    finally spark.conf.unset("spark.graft.stats.ndv")
+    Snapshots.commit(spark, data, noNdv)
+    dropSketches(noNdv, ndv = true)
     // stats table: per-file ndv column present and sane (HLL ±2% envelope)
     val st = Snapshots.statsTable(spark, withNdv)
     assert(st.columns.contains("ndv"))
@@ -685,7 +699,7 @@ class ConnectorSpec extends SparkSuite {
     val merged = Snapshots.scanNdv(withNdv)
     assert(merged("g") === 3L)
     assert(math.abs(merged("k") - 4000L) <= 200L)
-    assert(Snapshots.scanNdv(noNdv).isEmpty) // opt-out wrote no sketches
+    assert(Snapshots.scanNdv(noNdv).isEmpty) // the twin carries no sketches
     // CBO join planning: GROUP BY g estimates 3 output rows only when the
     // scan reports g's distinct count — that side then sizes under the
     // broadcast threshold. The sketch-less twin table estimates the
@@ -720,15 +734,14 @@ class ConnectorSpec extends SparkSuite {
       when(col("id") < 99000, col("id") % 8)
         .otherwise(lit(2097152L) + (col("id") - 99000L) * 500000L).as("v"))
     Snapshots.commit(spark, data, withHist)
-    spark.conf.set("spark.graft.stats.histograms", "false")
-    try Snapshots.commit(spark, data, noHist)
-    finally spark.conf.unset("spark.graft.stats.histograms")
+    Snapshots.commit(spark, data, noHist)
+    dropSketches(noHist, hist = true)
     // merged counts: fixed log2 boundaries sum across files; the head
     // mass sits in buckets 0..3, the tail above bucket 21
     val counts = Snapshots.scanHistograms(withHist)("v")
     assert(counts.filter(_._1 <= 3).values.sum === 99000L)
     assert(counts.filter(_._1 >= 22).values.sum === 1000L)
-    assert(Snapshots.scanHistograms(noHist).isEmpty) // opt-out wrote none
+    assert(Snapshots.scanHistograms(noHist).isEmpty) // the twin carries none
     val truth = data.filter(col("v") > 1048576L).count() // = 1000
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (100 * 1024).toString)
@@ -770,10 +783,9 @@ class ConnectorSpec extends SparkSuite {
     val root = tmpDir("graft_conn_analyze")
     val (legacy, adopted, foreignDir) = (s"$root/legacy", s"$root/adopted", s"$root/producer")
     val data = spark.range(1000).select(col("id").as("k"), (col("id") % 5).as("g"))
-    // a table ingested with NDV collection off
-    spark.conf.set("spark.graft.stats.ndv", "false")
-    try Snapshots.commit(spark, data, legacy)
-    finally spark.conf.unset("spark.graft.stats.ndv")
+    // a table whose sidecars predate NDV sketches
+    Snapshots.commit(spark, data, legacy)
+    dropSketches(legacy, ndv = true)
     assert(Snapshots.scanNdv(legacy).isEmpty)
     assert(Snapshots.collectStats(spark, legacy) === 1L)
     assert(Snapshots.scanNdv(legacy)("g") === 5L)
