@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 /** Batch ingestion with the reference's storage semantics, re-expressed for
@@ -30,7 +32,8 @@ import org.apache.spark.sql.functions._
   * (`pmod(xxhash64(key), numBuckets)`) and cluster by (key, time) inside
   * each bucket: partition pruning still eliminates (buckets-1)/buckets of
   * the data for a point lookup, and footer stats prune within the bucket.
-  * `bucketFor` is deterministic, so readers compute the same bucket.
+  * Readers find a key's bucket with [[bucketFor]], which folds the same
+  * expression [[bucketCol]] writes with, so the two cannot disagree.
   *
   * Storage seam: `base` is a Hadoop-filesystem URI, not a local path —
   * `file:///...` here, `abfss://container@account.dfs.core.windows.net/...`
@@ -46,8 +49,27 @@ object BlockWriter {
   val DefaultBuckets = 64
   val DefaultMaxRecordsPerFile = 8192L // reference MaxSize, blockManager_test.go:19
 
-  def bucketCol(partitionCol: String, numBuckets: Int) =
-    pmod(xxhash64(col(partitionCol)), lit(numBuckets)).cast("int")
+  def bucketCol(partitionCol: String, numBuckets: Int): Column =
+    bucketOf(col(partitionCol), numBuckets)
+
+  /** The bucket a row whose partition value is the constant `key` is
+    * written to: [[bucketCol]]'s `pmod(xxhash64(key), numBuckets)`,
+    * analysed and evaluated on the driver, with no job. The hash depends
+    * on the key's type (an INT 7 and a BIGINT 7 hash differently), so
+    * cast `key` to the partition column's type first. `None` when `key`
+    * is not foldable (a column reference, a non-deterministic call).
+    */
+  def bucketFor(spark: SparkSession, key: Column, numBuckets: Int): Option[Int] = {
+    val analyzed =
+      try Some(spark.emptyDataFrame.select(key, bucketOf(key, numBuckets)).queryExecution.analyzed)
+      catch { case _: AnalysisException => None } // refers to columns
+    analyzed.collect {
+      case Project(Seq(Alias(k, _), bucket), _) if k.foldable => bucket.eval(null).asInstanceOf[Int]
+    }
+  }
+
+  private def bucketOf(key: Column, numBuckets: Int): Column =
+    pmod(xxhash64(key), lit(numBuckets)).cast("int")
 
   /** Write `df` as a partitioned, key-clustered Parquet layout under `base`. */
   def write(df: DataFrame, base: String, partitionCol: String, keyCol: String,

@@ -112,6 +112,27 @@ object Bridge {
     }
   }
 
+  /** The schema a Parquet read infers from the one file `status`, found on
+    * the driver without a job: its footer (row groups skipped) through
+    * `ParquetFileFormat.readSchemaFromFooter`, the conversion Spark's
+    * schema-inference job runs on each footer (the Spark schema the writer
+    * kept in the footer, else the Parquet types under the session's
+    * settings), made nullable as a file source's read schema is. Throws
+    * when the footer does not read.
+    */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession,
+                    status: org.apache.hadoop.fs.FileStatus,
+                    conf: org.apache.hadoop.conf.Configuration): org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(status.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[SparkSession].sessionState.conf)).asNullable
+  }
+
   /** `df`'s rows as the engine's internal row RDD. */
   def toRdd(df: org.apache.spark.sql.DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[Dataset[org.apache.spark.sql.Row]].queryExecution.toRdd

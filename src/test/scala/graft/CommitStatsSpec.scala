@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ingest.{FileStats, Snapshots}
-import scala.jdk.CollectionConverters._
 
 /** The one-pass write path: a batch's stats sidecar is built by the write
   * job itself, so a commit's data write is one Spark job, and the sidecar
@@ -14,32 +12,6 @@ import scala.jdk.CollectionConverters._
 class CommitStatsSpec extends SparkSuite {
 
   private def conf = spark.sparkContext.hadoopConfiguration
-  private val JobTag = "graft.test.jobs"
-
-  /** `body`'s result and the number of Spark jobs it started. Jobs are
-    * tagged by a thread-local property; a marker job run after `body`
-    * shows when the listener bus has delivered every earlier job start.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(JobTag))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(JobTag, tag)
-      val out = try body finally sc.setLocalProperty(JobTag, null)
-      sc.setLocalProperty(JobTag, s"$tag:end")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(JobTag, null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(s"$tag:end") && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.contains(s"$tag:end"), "listener bus did not deliver the marker job")
-      (out, seen.asScala.count(_ == tag))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def dirsOf(base: String, prefix: String): Set[String] =
     Option(new java.io.File(base, "data").listFiles()).getOrElse(Array.empty)

@@ -246,4 +246,33 @@ class IngestQuerySpec extends SparkSuite with TableDrivenPropertyChecks {
       tolerateForeignFiles = true).count()
     assert(got === directCount(13L, 0L, Long.MaxValue / 2))
   }
+
+  test("foreign files in the bucket being looked up are ignored under lenient parity mode") {
+    val dir = tmpDir("graft_foreign_target_spec")
+    BlockWriter.write(Tables.events(spark, sf).drop("ts", "ts_t"),
+      dir, partitionCol = "user_id", keyCol = "ts_us",
+      numBuckets = 4, maxRecordsPerFile = 64)
+    val bucket = BlockWriter.bucketFor(spark, lit(13L), 4).get
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, s"bucket=$bucket", "junk.parquet"),
+      "this is not a parquet file")
+    val got = RangeQuery.query(spark, dir, "user_id", "ts_us",
+      lit(13L), lit(0L), lit(Long.MaxValue / 2), numBuckets = 4,
+      tolerateForeignFiles = true).count()
+    assert(got === directCount(13L, 0L, Long.MaxValue / 2))
+  }
+
+  test("an INT literal key finds the rows of a BIGINT partition column") {
+    // The bucket hash depends on the key's type: hashing lit(7) as an INT
+    // picked another bucket and returned no rows.
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("graft_int_key_spec")
+    val df = (0L until 512L).map(i => (i % 16, i, s"p$i")).toDF("user_id", "ts_us", "payload")
+    BlockWriter.write(df, dir, partitionCol = "user_id", keyCol = "ts_us")
+    def count(key: org.apache.spark.sql.Column): Long =
+      RangeQuery.query(spark, dir, "user_id", "ts_us", key, lit(0L), lit(Long.MaxValue)).count()
+    assert(count(lit(7L)) === 32L)
+    assert(count(lit(7)) === 32L)
+  }
 }

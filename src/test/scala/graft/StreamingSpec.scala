@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.ingest.BlockWriter
 import graft.streaming.{Sessionize, StreamIngest}
 import graft.query.RangeQuery
 
@@ -38,6 +39,34 @@ class StreamingSpec extends SparkSuite {
     assert(got.count() === expected)
     val (partFilters, _) = RangeQuery.scanFilters(got)
     assert(partFilters.exists(_.contains("bucket")))
+  }
+
+  test("a streaming sink's lookup sees only files its commit log holds") {
+    val s = spark
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
+    val mem = MemoryStream[(Long, Long, Double)]
+    val base = tmpDir("graft_stream_log_base")
+    val cp = tmpDir("graft_stream_log_cp")
+    val q = StreamIngest.start(mem.toDF().toDF("user_id", "ts_us", "value"), base, cp,
+      "user_id", "ts_us", numBuckets = 4, maxRecordsPerFile = 10, maxAgeMs = 100L)
+    try {
+      mem.addData((1 to 30).map(i => (i.toLong % 3, i.toLong * 1000, i / 2.0)): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    // A valid Parquet file with matching rows, in user 1's bucket
+    // directory, that no micro-batch committed.
+    val stray = tmpDir("graft_stream_log_stray")
+    Seq((1L, 15000L, 99.0), (1L, 16000L, 99.0)).toDF("user_id", "ts_us", "value")
+      .coalesce(1).write.mode("overwrite").parquet(stray)
+    val part = new java.io.File(stray).listFiles().filter(_.getName.startsWith("part-")).head
+    val bucketDir = new java.io.File(base, s"bucket=${BlockWriter.bucketFor(spark, lit(1L), 4).get}")
+    java.nio.file.Files.copy(part.toPath, new java.io.File(bucketDir, "part-stray.parquet").toPath)
+    assert(spark.read.parquet(bucketDir.getPath).filter(col("value") === 99.0).count() === 2)
+    val got = RangeQuery.query(spark, base, "user_id", "ts_us",
+      lit(1L), lit(10000L), lit(20000L), numBuckets = 4)
+    assert(got.filter(col("value") === 99.0).count() === 0)
+    assert(got.count() === (10 to 20).count(i => i % 3 == 1))
   }
 
   test("sessionize closes sessions on the event-time gap") {
