@@ -148,8 +148,9 @@ object Bench {
             try fn(spark, warmSf).count() catch { case _: Throwable => () }
           }
       }
-      // Stage the TIMED scale factor's fixture trees (ingest layout, Bloom
-      // sidecar, snapshot/DV/merge/MV caches) before any clock starts —
+      // Stage the TIMED scale factor's fixture trees (every registry
+      // entry: ingest layout + Bloom sidecar, snapshot/DV/merge/MV caches,
+      // catalogs, format copies, media, ANN) before any clock starts —
       // the sf0.001 warmup above only stages sf0.001's trees, so after a
       // cache wipe the first timed snap/mv query would otherwise absorb
       // the whole staging cost (mv1 recorded 6.4x its isolated time in
@@ -159,7 +160,7 @@ object Bench {
       // print fell out of the bounded log tail, leaving a 6x-inflated
       // ref_bloom_point number with no visible cause. Full stack to
       // stderr + a flag that rides the summary JSON itself.
-      try graft.query.RefParity.prestage(spark, sfDir)
+      try SparkEntry.prestage(spark, sfDir)
       catch { case e: Throwable =>
         prestageFailed = s"${e.getClass.getName}: ${e.getMessage}"
         System.err.println(s"BENCH PRESTAGE FAIL: $prestageFailed")

@@ -26,7 +26,7 @@ object OptProbe {
         println(f"OPTPROBE $label%-28s ${ts.min}%8.3f  (first ${ts.head}%.3f)")
       }
 
-    graft.query.RefParity.prestage(spark, sfDir)
+    SparkEntry.prestage(spark, sfDir)
 
     // ---- media decode ----
     val imgPath = graft.ops.Multimodal.imgDupDir(spark, sfDir) + "/image"

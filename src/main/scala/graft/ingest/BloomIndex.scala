@@ -84,7 +84,7 @@ object BloomIndex {
     * exactly that stack). `_SUCCESS` is the completion marker: present ⇒
     * every part file of the committed build is in place.
     */
-  private def ensureSidecar(spark: SparkSession, base: String, column: String): String = {
+  private[graft] def ensureSidecar(spark: SparkSession, base: String, column: String): String = {
     val sc = sidecar(base, column)
     val fs = new Path(sc).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(sc, "_SUCCESS"))) {
@@ -93,18 +93,7 @@ object BloomIndex {
       // both see the missing marker would otherwise interleave their
       // delete-then-write into the SAME destination, and the mixed-parts
       // result can carry a _SUCCESS that vouches for neither build.
-      // Single-winner publish: evict a marker-less corpse, rename; the
-      // loser (a completed winner is present) discards its rebuild.
-      val tmp = new Path(sc + s".rebuild-${java.lang.ProcessHandle.current().pid()}")
-      build(spark, base, column, dest = tmp.toString)
-      val scPath = new Path(sc)
-      if (fs.exists(scPath) && !fs.exists(new Path(sc, "_SUCCESS")))
-        fs.delete(scPath, true)
-      if (!fs.rename(tmp, scPath)) {
-        if (fs.exists(new Path(sc, "_SUCCESS"))) fs.delete(tmp, true)
-        else throw new java.io.IOException(
-          s"failed to publish rebuilt sidecar $sc and no completed winner is present")
-      }
+      Staging.publish(spark, sc, "_SUCCESS")(build(spark, base, column, _))
     }
     sc
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ingest.Staging
 import graft.ops.VecOps.Vec
 
 /** Persisted, incrementally-maintained ANN index over an embedding table —
@@ -230,9 +231,8 @@ object AnnIndex {
     sc
   }
 
-  /** The ready sidecar path, rebuilt via stage-and-rename if missing or
-    * partial — BloomIndex.ensureSidecar's single-winner publish: evict a
-    * marker-less corpse, rename, loser discards.
+  /** The ready sidecar path, rebuilt via [[graft.ingest.Staging.publish]]
+    * if missing or partial.
     */
   def ensure(s: SparkSession, base: String, idCol: String = "vec_id",
              embCol: String = "embedding"): String = {
@@ -240,30 +240,9 @@ object AnnIndex {
     val fs = fsOf(s, sc)
     if (!fs.exists(new Path(sc, Marker))) {
       System.err.println(s"AnnIndex: sidecar $sc absent or partial - rebuilding")
-      rebuildAndPublish(s, sc, writeIndex(s, base, idCol, embCol, _))
+      Staging.publish(s, sc, Marker)(writeIndex(s, base, idCol, embCol, _))
     }
     sc
-  }
-
-  /** Stage a full build into a temp sibling, mark it, and publish by
-    * rename — the single-winner protocol [[ensure]] established, shared
-    * by the live-table build path.
-    */
-  private def rebuildAndPublish(s: SparkSession, sc: String,
-                                build: String => Unit): Unit = {
-    val fs = fsOf(s, sc)
-    val tmp = sc + s".rebuild-${java.lang.ProcessHandle.current().pid()}"
-    build(tmp)
-    fsOf(s, tmp).create(new Path(tmp, Marker), true).close()
-    val scPath = new Path(sc)
-    if (fs.exists(scPath) && !fs.exists(new Path(sc, Marker)))
-      fs.delete(scPath, true)
-    if (!fs.rename(new Path(tmp), scPath)) {
-      if (fs.exists(new Path(sc, Marker))) fs.delete(new Path(tmp), true)
-      else throw new java.io.IOException(
-        s"failed to publish rebuilt ANN sidecar $sc and no completed " +
-          "winner is present")
-    }
   }
 
   /** Explicit part-file listing under a (possibly cell-partitioned)
@@ -354,8 +333,8 @@ object AnnIndex {
     }
     def pathOf(uri: String) = new java.net.URI(uri).getPath
     val existing = assignments(s, sc)
-    if (staleLayout(existing)) {
-      rebuildAndPublish(s, sc, writeIndex(s, base, idCol, embCol, _))
+    if (staleLayout(s, sc, existing)) {
+      Staging.publish(s, sc, Marker)(writeIndex(s, base, idCol, embCol, _))
       return s.read.parquet(base).inputFiles.length
     }
     val covered = existing.select("file").distinct()
@@ -372,12 +351,16 @@ object AnnIndex {
 
   /** A sidecar written before the assign layout carried row positions
     * cannot serve coordinate-grain subtraction — rebuild it (loud, one
-    * rebuild, same crash posture as a torn sidecar).
+    * rebuild, same crash posture as a torn sidecar). A stale sidecar
+    * loses its marker here, so the rebuild's publish evicts it.
     */
-  private def staleLayout(assign: DataFrame): Boolean = {
+  private def staleLayout(s: SparkSession, sc: String, assign: DataFrame): Boolean = {
     val stale = !assign.columns.contains("pos")
-    if (stale) System.err.println(
-      "AnnIndex: assign table predates the coordinate-carrying layout - rebuilding")
+    if (stale) {
+      System.err.println(
+        "AnnIndex: assign table predates the coordinate-carrying layout - rebuilding")
+      fsOf(s, sc).delete(new Path(sc, Marker), false)
+    }
     stale
   }
 
@@ -441,17 +424,14 @@ object AnnIndex {
     val fs = fsOf(s, sc)
     def pathOf(uri: String) = new java.net.URI(uri).getPath
     val livePaths = live.map(pathOf).toSet
-    if (!fs.exists(new Path(sc, Marker))) {
-      rebuildAndPublish(s, sc,
+    def rebuild(): (Int, Int) = {
+      Staging.publish(s, sc, Marker)(
         writeIndexOver(s, s.read.parquet(live: _*), idCol, embCol, _))
-      return (live.length, 0)
+      (live.length, 0)
     }
+    if (!fs.exists(new Path(sc, Marker))) return rebuild()
     val existing = assignments(s, sc)
-    if (staleLayout(existing)) {
-      rebuildAndPublish(s, sc,
-        writeIndexOver(s, s.read.parquet(live: _*), idCol, embCol, _))
-      return (live.length, 0)
-    }
+    if (staleLayout(s, sc, existing)) return rebuild()
     val coveredUris = existing.select("file").distinct()
       .collect().map(_.getString(0))
     val covered = coveredUris.map(pathOf).toSet

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.TextSources
 import graft.tables.Tables
-import graft.query.RefParity.{cacheBase, stagedTree}
+import graft.query.Fixture
 
 /** Interchange-format roundtrips as ORACLE-CERTIFIED registry queries.
   *
@@ -16,12 +16,12 @@ import graft.query.RefParity.{cacheBase, stagedTree}
   * writers live in [[graft.sources.TextSources]] (spec-green since round 5)
   * but until round 13 no registry query pinned their VALUE fidelity against
   * the DuckDB oracle. Each query below stages a format copy of a parquet
-  * table once per (sf, layout) — the same build-once [[stagedTree]] protocol
-  * as the Avro/catalog fixtures — reads it back through the schema'd source,
-  * and aggregates; the oracle computes the identical aggregate over the
-  * original parquet, so any value lost or mangled in the encode→decode trip
-  * (quoting, escaping, numeric text rendering, timestamp binary encoding)
-  * breaks the hash.
+  * table once per (sf, layout) — an entry of the fixture registry
+  * ([[Formats.fixtures]]), like the Avro/catalog fixtures — reads it back
+  * through the schema'd source, and aggregates; the oracle computes the
+  * identical aggregate over the original parquet, so any value lost or
+  * mangled in the encode→decode trip (quoting, escaping, numeric text
+  * rendering, timestamp binary encoding) breaks the hash.
   *
   * Scale shape: the staging write is one partitioned pass (bounded files via
   * `maxRecordsPerFile`, BlockWriter's stance); the read-back is a plain
@@ -59,31 +59,28 @@ object Formats {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  private def csvDir(s: SparkSession, d: String): String =
-    stagedTree(cacheBase("graft_fmtcsv", d, "events")) { tmp =>
-      TextSources.writeCsv(
-        Tables.events(s, d).select(
-          col("event_id"), col("user_id"), col("event_type"), col("value"),
-          col("ts_us").as("us"), col("props")),
-        tmp)
-    }
+  private val csvDir = Fixture("graft_fmtcsv", "events") { (s, d, tmp) =>
+    TextSources.writeCsv(
+      Tables.events(s, d).select(
+        col("event_id"), col("user_id"), col("event_type"), col("value"),
+        col("ts_us").as("us"), col("props")),
+      tmp)
+  }
 
-  private def jsonlDir(s: SparkSession, d: String): String =
-    stagedTree(cacheBase("graft_fmtjsonl", d, "documents")) { tmp =>
-      TextSources.writeJsonLines(
-        Tables.table(s, d, "documents").select(
-          col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")),
-        tmp)
-    }
+  private val jsonlDir = Fixture("graft_fmtjsonl", "documents") { (s, d, tmp) =>
+    TextSources.writeJsonLines(
+      Tables.table(s, d, "documents").select(
+        col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")),
+      tmp)
+  }
 
-  private def orcDir(s: SparkSession, d: String): String =
-    stagedTree(cacheBase("graft_fmtorc", d, "events")) { tmp =>
-      TextSources.writeOrc(
-        Tables.events(s, d).select(
-          col("event_id"), col("ts_t").as("ts"), col("user_id"),
-          col("event_type"), col("value")),
-        tmp)
-    }
+  private val orcDir = Fixture("graft_fmtorc", "events") { (s, d, tmp) =>
+    TextSources.writeOrc(
+      Tables.events(s, d).select(
+        col("event_id"), col("ts_t").as("ts"), col("user_id"),
+        col("event_type"), col("value")),
+      tmp)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "fmt1_csv_roundtrip" -> { (s, d) =>
@@ -112,6 +109,8 @@ object Formats {
         max(unix_micros(col("ts"))).as("max_us"),
         round(sum(col("value")), 2).as("sum_v"))
     })
+
+  def fixtures: Seq[Fixture] = Seq(csvDir, jsonlDir, orcDir)
 
   val oracleSql: Map[String, String] = Map(
     "fmt1_csv_roundtrip" ->

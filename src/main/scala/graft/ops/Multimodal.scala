@@ -8,6 +8,7 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.query.Fixture
 import graft.tables.Tables
 
 /** Multimodal-column pipeline: image/audio/video payloads as opaque
@@ -466,19 +467,16 @@ object Multimodal {
     * DECODED base payload — the staged tree exercises the full
     * decode → perturb → re-encode chain the oracle then checks.
     */
-  def imgDupDir(s: SparkSession, d: String): String = {
-    import graft.query.RefParity.{cacheBase, stagedTree}
-    stagedTree(cacheBase("graft_imgdup", d, "documents")) { tmp =>
-      import s.implicits._
-      val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
-      val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
-      ids.map(id => ImgRecord(id, encodeBlockPng(id)))
-        .union(ids.filter(_ % 5 == 0).map(id =>
-          ImgRecord(id + shift, reencodePng(posterize(decodeImage(encodeBlockPng(id)))))))
-        .union(ids.filter(_ % 9 == 0).map(id =>
-          ImgRecord(id + 2 * shift, reencodePng(nnResize(decodeImage(encodeBlockPng(id)))))))
-        .write.parquet(tmp + "/image")
-    }
+  val imgDupDir: Fixture = Fixture("graft_imgdup", "documents") { (s, d, tmp) =>
+    import s.implicits._
+    val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
+    val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
+    ids.map(id => ImgRecord(id, encodeBlockPng(id)))
+      .union(ids.filter(_ % 5 == 0).map(id =>
+        ImgRecord(id + shift, reencodePng(posterize(decodeImage(encodeBlockPng(id)))))))
+      .union(ids.filter(_ % 9 == 0).map(id =>
+        ImgRecord(id + 2 * shift, reencodePng(nnResize(decodeImage(encodeBlockPng(id)))))))
+      .write.parquet(tmp + "/image")
   }
 
   // ---- audio perceptual near-dup (m8) --------------------------------------
@@ -576,19 +574,16 @@ object Multimodal {
     * (ids shifted by max+1 / 2·max+1, the m7 discipline). Perturbations
     * run on DECODED samples and re-encode through the codec.
     */
-  def audDupDir(s: SparkSession, d: String): String = {
-    import graft.query.RefParity.{cacheBase, stagedTree}
-    stagedTree(cacheBase("graft_auddup", d, "documents")) { tmp =>
-      import s.implicits._
-      val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
-      val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
-      ids.map(id => ImgRecord(id, buildAmpWav(id)))
-        .union(ids.filter(_ % 5 == 0).map(id => ImgRecord(id + shift,
-          encodePcm(resampleHalf(decodeSamples(buildAmpWav(id)))))))
-        .union(ids.filter(_ % 9 == 0).map(id => ImgRecord(id + 2 * shift,
-          encodePcm(crop16(decodeSamples(buildAmpWav(id)))))))
-        .write.parquet(tmp + "/audio")
-    }
+  val audDupDir: Fixture = Fixture("graft_auddup", "documents") { (s, d, tmp) =>
+    import s.implicits._
+    val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
+    val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
+    ids.map(id => ImgRecord(id, buildAmpWav(id)))
+      .union(ids.filter(_ % 5 == 0).map(id => ImgRecord(id + shift,
+        encodePcm(resampleHalf(decodeSamples(buildAmpWav(id)))))))
+      .union(ids.filter(_ % 9 == 0).map(id => ImgRecord(id + 2 * shift,
+        encodePcm(crop16(decodeSamples(buildAmpWav(id)))))))
+      .write.parquet(tmp + "/audio")
   }
 
   // ---- video near-dup (m10) ------------------------------------------------
@@ -638,21 +633,18 @@ object Multimodal {
     * exactly, which is what makes frame-set containment the right
     * detector for cut/reordered re-uploads.
     */
-  def vidDupDir(s: SparkSession, d: String): String = {
-    import graft.query.RefParity.{cacheBase, stagedTree}
-    stagedTree(cacheBase("graft_viddup", d, "documents")) { tmp =>
-      import s.implicits._
-      def remux(payload: Array[Byte], edit: IndexedSeq[Array[Byte]] => Seq[Array[Byte]]) =
-        muxFrames(edit(demux(payload)).map(f => reencodePng(decodeImage(f))))
-      val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
-      val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
-      ids.map(id => ImgRecord(id, buildVidContainer(id)))
-        .union(ids.filter(_ % 5 == 0).map(id =>
-          ImgRecord(id + shift, remux(buildVidContainer(id), _.drop(1)))))
-        .union(ids.filter(_ % 9 == 0).map(id =>
-          ImgRecord(id + 2 * shift, remux(buildVidContainer(id), _.reverse))))
-        .write.parquet(tmp + "/video")
-    }
+  val vidDupDir: Fixture = Fixture("graft_viddup", "documents") { (s, d, tmp) =>
+    import s.implicits._
+    def remux(payload: Array[Byte], edit: IndexedSeq[Array[Byte]] => Seq[Array[Byte]]) =
+      muxFrames(edit(demux(payload)).map(f => reencodePng(decodeImage(f))))
+    val ids = Tables.table(s, d, "documents").select(col("doc_id")).as[Long]
+    val shift = ids.agg(max(col("doc_id"))).as[Long].head() + 1L
+    ids.map(id => ImgRecord(id, buildVidContainer(id)))
+      .union(ids.filter(_ % 5 == 0).map(id =>
+        ImgRecord(id + shift, remux(buildVidContainer(id), _.drop(1)))))
+      .union(ids.filter(_ % 9 == 0).map(id =>
+        ImgRecord(id + 2 * shift, remux(buildVidContainer(id), _.reverse))))
+      .write.parquet(tmp + "/video")
   }
 
   // ---- media tables (documents re-materialized as binary columns) ----
@@ -693,18 +685,17 @@ object Multimodal {
     * lake once; every pipeline pass decodes from storage), and their
     * timings measure demux + codec decode, not fixture synthesis.
     */
-  def mediaDir(s: SparkSession, d: String): String = {
-    import graft.query.RefParity.{cacheBase, stagedTree}
-    stagedTree(cacheBase("graft_media", d, "documents")) { tmp =>
-      mediaTable(s, d).write.parquet(tmp + "/video")
-      imageTable(s, d).write.parquet(tmp + "/image")
-      audioTable(s, d).write.parquet(tmp + "/audio")
-    }
+  val mediaDir: Fixture = Fixture("graft_media", "documents") { (s, d, tmp) =>
+    mediaTable(s, d).write.parquet(tmp + "/video")
+    imageTable(s, d).write.parquet(tmp + "/image")
+    audioTable(s, d).write.parquet(tmp + "/audio")
   }
 
   private def staged[T: org.apache.spark.sql.Encoder](
       s: SparkSession, d: String, leaf: String): Dataset[T] =
     s.read.parquet(mediaDir(s, d) + "/" + leaf).as[T]
+
+  def fixtures: Seq[Fixture] = Seq(mediaDir, imgDupDir, audDupDir, vidDupDir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m1_media_features" -> { (s, d) =>

@@ -178,7 +178,7 @@ object Relational {
       // saveAsTable needs a live metastore entry, so the shared-tree
       // rename protocol the other fixtures use doesn't apply here; the
       // metastore entry is session-local either way).
-      val fpBase = graft.query.RefParity.cacheBase("graft_bkt", d, "lineitem")
+      val fpBase = graft.query.Fixture.cacheBase("graft_bkt", d, "lineitem")
       val key = fpBase.substring(fpBase.lastIndexOf('/') + 1)
         .replaceAll("[^a-zA-Z0-9]", "_")
       val (lt, ot) = (s"lineitem_bkt_$key", s"orders_bkt_$key")
@@ -186,7 +186,7 @@ object Relational {
         val pid = java.lang.ProcessHandle.current().pid()
         def stage(src: String, tbl: String, k: String): Unit =
           Tables.table(s, d, src).write.mode("overwrite")
-            .option("path", s"/tmp/graft_bkt/pid$pid/$tbl")
+            .option("path", s"${graft.query.Fixture.Tmp}/graft_bkt/pid$pid/$tbl")
             .bucketBy(8, k).sortBy(k).saveAsTable(tbl)
         stage("lineitem", lt, "l_orderkey")
         stage("orders", ot, "o_orderkey")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.query.Fixture
 import graft.tables.Tables
 import graft.ops.VecOps.Vec
 
@@ -351,15 +352,12 @@ object Sim {
     * table it covers. Four range-partitioned files stand in for a real
     * ingest's many-file layout so incremental coverage is non-trivial.
     */
-  def annDir(s: SparkSession, d: String): String =
-    graft.query.RefParity.stagedTree(
-      graft.query.RefParity.cacheBase("graft_ann", d, "embeddings")) { tmp =>
-      Tables.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.parquet(tmp)
-      AnnIndex.buildAt(s, tmp)
-      ()
-    }
+  val annDir: Fixture = Fixture("graft_ann", "embeddings") { (s, d, tmp) =>
+    Tables.table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
+      .repartitionByRange(4, col("vec_id"))
+      .write.parquet(tmp)
+    AnnIndex.buildAt(s, tmp)
+  }
 
   private def queryVecsOf(s: SparkSession, base: String): Array[Vec] =
     VecOps.vectors(s, s.read.parquet(base).filter(col("vec_id") < NumQueries),
@@ -375,20 +373,17 @@ object Sim {
     * assign table); at steady state that call sees (0, 0) and writes
     * nothing, so the cached fixture is read-only across runs.
     */
-  def annLiveDir(s: SparkSession, d: String): String =
-    graft.query.RefParity.stagedTree(
-      graft.query.RefParity.cacheBase("graft_annlive", d, "embeddings")) { tmp =>
-      import graft.ingest.Snapshots
-      val emb = Tables.table(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      Snapshots.commit(s, emb.filter(col("vec_id") % 5 =!= 0)
-        .repartitionByRange(3, col("vec_id")), tmp)
-      Snapshots.commit(s, emb.filter(col("vec_id") % 5 === 0), tmp)
-      Snapshots.deleteByKeys(s, tmp,
-        emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= NumQueries)
-          .select("vec_id"))
-      ()
-    }
+  val annLiveDir: Fixture = Fixture("graft_annlive", "embeddings") { (s, d, tmp) =>
+    import graft.ingest.Snapshots
+    val emb = Tables.table(s, d, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    Snapshots.commit(s, emb.filter(col("vec_id") % 5 =!= 0)
+      .repartitionByRange(3, col("vec_id")), tmp)
+    Snapshots.commit(s, emb.filter(col("vec_id") % 5 === 0), tmp)
+    Snapshots.deleteByKeys(s, tmp,
+      emb.filter(col("vec_id") % 7 === 3 && col("vec_id") >= NumQueries)
+        .select("vec_id"))
+  }
 
   /** Exact top-k hit set over the LIVE rows of a snapshot table — the
     * recall baseline for the live probes: deleted rows are neither
@@ -902,6 +897,8 @@ object Sim {
       .filter(col("pos") <= BalanceCap)
       .select(col("bucket"), col("vec_id"), col("pos"))
   }
+
+  def fixtures: Seq[Fixture] = Seq(annDir, annLiveDir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v7_balanced_sample" -> { (s, d) => bucketBalancedSample(s, d) },

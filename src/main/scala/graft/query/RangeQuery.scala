@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSessi
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.ingest.BlockWriter
 
 /** The reference's one query operator: `Query(partitionKey, startKey,
@@ -44,6 +44,8 @@ object RangeQuery {
     * (a `_spark_metadata` log under `base`), whose files are visible only
     * through that commit log. A root of 64 buckets is over Spark's
     * parallel-discovery threshold (32), so that read lists in a Spark job.
+    * Under `tolerateForeignFiles` a non-constant key's root read also
+    * gets its schema from the first readable footer ([[tolerantSchema]]).
     *
     * `tolerateForeignFiles` reproduces the reference's lenient listing
     * (block.go:149-174: filenames that don't parse are skipped, so foreign
@@ -65,7 +67,9 @@ object RangeQuery {
       case Some((df, bucket, key)) =>
         df.filter(col("bucket") === bucket && col(partitionCol) === key && inRange)
       case None =>
-        reader.parquet(base)
+        val root = if (!tolerateForeignFiles) reader
+          else tolerantSchema(spark, base).fold(reader)(reader.schema)
+        root.parquet(base)
           .filter(col("bucket") === pmod(xxhash64(partitionKey), lit(numBuckets)).cast("int") &&
             col(partitionCol) === partitionKey && inRange)
     }
@@ -117,6 +121,35 @@ object RangeQuery {
   }
 
   private val BucketDir = "bucket=(\\d+)".r
+
+  /** The root read's schema under `tolerateForeignFiles`, picked as the
+    * constant-key path picks it: the first data file, in bucket and name
+    * order, whose footer reads, plus `bucket`. Spark's own inference
+    * reads only the first file it lists, so a foreign file listed first
+    * (`junk.parquet` sorts before `part-`) failed the whole read. None
+    * for a streaming sink, whose files are visible only through its log.
+    */
+  private def tolerantSchema(spark: SparkSession, base: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(base).getFileSystem(conf)
+    val entries = try fs.listStatus(new Path(base)) catch { case _: FileNotFoundException => return None }
+    if (entries.exists(_.getPath.getName == "_spark_metadata")) return None
+    val dirs = entries.toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case BucketDir(n) if st.isDirectory => Some(n.toInt -> st.getPath)
+        case _ => None
+      }
+    }.sortBy(_._1)
+    dirs.iterator.flatMap { case (_, dir) =>
+      fs.listStatus(dir).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+    }.flatMap { st =>
+      try Some(Bridge.parquetSchema(spark, st, conf))
+      catch { case _: IOException | _: RuntimeException => None }
+    }.nextOption().map(_.add("bucket", IntegerType))
+  }
 
   /** [[query]] over a layout whose batches carry evolved (additive)
     * schemas — `mergeSchema` unions the per-file Parquet schemas, so rows

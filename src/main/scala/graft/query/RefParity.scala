@@ -1,8 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ingest.BlockWriter
+import graft.ingest.{BlockWriter, BloomIndex, MatView, Snapshots}
 import graft.tables.Tables
 
 /** Driver-facing queries for the reference's own operator surface:
@@ -21,96 +21,46 @@ object RefParity {
   private def outCols(df: DataFrame): DataFrame =
     df.select(col("event_id"), col("user_id"), col("ts_us"), col("event_type"), col("value"))
 
-  /** Deterministic per-sf cache dir so the expensive ingest runs once.
-    * The key includes LayoutVersion (bump whenever BlockWriter's layout
-    * changes) AND a content fingerprint of the source parquet (size +
-    * mtime, recursive for directories) — regenerated testdata at the same
-    * path gets a fresh ingest instead of silently reading stale rows.
+  /** The events table through the reference's ingest (bucketed,
+    * key-clustered block files), staged once per cached layout — the key
+    * includes `Fixture`'s LayoutVersion, so bump it when BlockWriter's
+    * layout changes. Every use also ensures the per-file Bloom sidecar on
+    * event_id that `ref_bloom_point` probes, so prestaging builds it too.
     */
-  // v3: stats sidecars + INT64-micros timestamps
-  // v4: cache dir names no longer start with "_" — `/root/...` used to
-  //     sanitize to `_root_...`, a HIDDEN-looking read root that made
-  //     DataSource log `All paths were ignored` once per read (cosmetic —
-  //     explicit roots are exempt from hidden filtering — but five of
-  //     them per bench run is exactly the noise that crowds a bounded
-  //     log tail)
-  private val LayoutVersion = "v4"
-
-  /** A filesystem-safe, NON-HIDDEN cache key segment for an sf dir. */
-  private def sfKey(sfDir: String): String =
-    sfDir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
-
-  private def fingerprint(f: java.io.File): Long = {
-    val self = f.length ^ java.lang.Long.rotateLeft(f.lastModified, 21)
-    if (!f.isDirectory) self
-    // listFiles() ordering is filesystem-dependent and the rotate/XOR fold
-    // is non-commutative — sort by name so an unchanged directory always
-    // fingerprints identically (no spurious re-ingests or orphaned dirs).
-    else f.listFiles().sortBy(_.getName).foldLeft(self) { (acc, c) =>
-      java.lang.Long.rotateLeft(acc, 7) ^ fingerprint(c)
-    }
-  }
-
-  private def ingestDir(sfDir: String): String = {
-    val fp = java.lang.Long.toHexString(
-      fingerprint(new java.io.File(sfDir, "events.parquet")))
-    s"/tmp/graft_ingest/$LayoutVersion/" + sfKey(sfDir) + s"_$fp"
-  }
-
-  /** Publish a staged tmp dir at `base` with single-winner semantics that
-    * survive CORPSES. A failed rename means EITHER a concurrent builder
-    * won (its completion marker is in place — our duplicate build is
-    * dropped; same fingerprinted input, identical output) OR a crashed
-    * run left a marker-less partial tree squatting on `base` — evict it
-    * and retry. Round 7's bench hit the corpse case: the old "assume we
-    * lost the race" path deleted the FRESH build, left the partial tree
-    * in place, and the first timed `ref_bloom_point` absorbed a rebuild
-    * plus a swallowed sidecar-read failure. Publishing must end with a
-    * marker-valid `base` or throw — never both delete tmp and leave
-    * `base` invalid.
-    */
-  private def publishStaged(tmp: String, base: String, marker: String): Unit = {
-    val (tmpF, baseF) = (new java.io.File(tmp), new java.io.File(base))
-    if (baseF.exists() && !new java.io.File(baseF, marker).exists())
-      org.apache.commons.io.FileUtils.deleteDirectory(baseF)
-    if (!tmpF.renameTo(baseF)) {
-      if (new java.io.File(baseF, marker).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(tmpF)
-      else throw new java.io.IOException(
-        s"failed to publish staged tree $base and no completed winner is present")
-    }
-  }
-
-  def ingestedEvents(spark: SparkSession, sfDir: String): String = {
-    val base = ingestDir(sfDir)
-    if (!new java.io.File(base, "_SUCCESS").exists()) {
-      // Write to a process-unique staging dir, then atomically rename into
-      // place — two concurrent Verify runs can't interleave partial output.
-      val tmp = base + ".tmp-" + java.lang.ProcessHandle.current().pid()
-      BlockWriter.write(Tables.events(spark, sfDir).drop("ts", "ts_t"),
-        tmp, partitionCol = "user_id", keyCol = "ts_us")
-      publishStaged(tmp, base, "_SUCCESS")
-    }
-    base
+  val ingestedEvents: Fixture = Fixture("graft_ingest", "events", marker = "_SUCCESS",
+      after = (s, base) => BloomIndex.ensureSidecar(s, base, "event_id")) { (s, d, tmp) =>
+    BlockWriter.write(Tables.events(s, d).drop("ts", "ts_t"),
+      tmp, partitionCol = "user_id", keyCol = "ts_us")
   }
 
   // exists at every sf (event ids are 0..999/9999/99999)
   private val PointEventId = 777L
 
-  /** [[ingestedEvents]] plus a per-file Bloom sidecar on event_id, built
-    * once per cached layout (stage to a pid-unique temp dir, atomically
-    * rename — same race discipline as the ingest itself).
+  private def qtyAggs: Seq[Column] =
+    Seq(count(lit(1)).as("n_rows"), round(sum(col("l_quantity")), 2).as("sum_qty"))
+
+  private def updAggs: Seq[Column] =
+    Seq(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"),
+      sum(when(col("v") >= 1000000L, 1L).otherwise(0L)).as("n_upd"))
+
+  /** One row per read, in order: `snap` (1, 2, …) and `aggs` over it. */
+  private def snapRows(reads: DataFrame*)(aggs: Seq[Column]): DataFrame =
+    reads.zipWithIndex.map { case (df, i) =>
+      val a = df.agg(aggs.head, aggs.tail: _*)
+      a.select(lit(i + 1).as("snap") +: a.columns.toSeq.map(col): _*)
+    }.reduce(_ unionAll _)
+
+  /** `q` over the mv1 source with its view registered, plus
+    * `rewrite_fired` (see mv4).
     */
-  private def bloomIndexedEvents(s: SparkSession, sfDir: String): String = {
-    import graft.ingest.BloomIndex
-    val base = ingestedEvents(s, sfDir)
-    val sc = new java.io.File(BloomIndex.sidecar(base, "event_id"))
-    if (!new java.io.File(sc, "_SUCCESS").exists()) {
-      val tmp = sc.getPath + ".tmp-" + java.lang.ProcessHandle.current().pid()
-      BloomIndex.build(s, base, "event_id", dest = tmp)
-      publishStaged(tmp, sc.getPath, "_SUCCESS")
-    }
-    base
+  private def viaView(s: SparkSession, d: String)(q: DataFrame => DataFrame): DataFrame = {
+    val mv = mvDir(s, d)
+    val src = snapshotDir(s, d)
+    MatView.register(src, mv, Seq("l_orderkey"), "l_quantity")
+    val agg = q(s.read.format("graft").load(src))
+    val bases = graft.connector.MvRewriteRule
+      .graftScanBases(agg.queryExecution.optimizedPlan)
+    agg.withColumn("rewrite_fired", lit(bases.contains(mv) && !bases.contains(src)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -132,8 +82,8 @@ object RefParity {
     // skipping path — sidecar probe prunes to ~1 file, residual filter
     // keeps the result exactly the full-scan answer (the oracle).
     "ref_bloom_point" -> { (s, d) =>
-      val base = bloomIndexedEvents(s, d)
-      outCols(graft.ingest.BloomIndex.lookup(s, base, "event_id", lit(PointEventId)))
+      val base = ingestedEvents(s, d)
+      outCols(BloomIndex.lookup(s, base, "event_id", lit(PointEventId)))
     },
     // Snapshot lifecycle: the same aggregate through (1) time travel to
     // v1, (2) the latest snapshot, (3) the incremental v1→v2 file-diff
@@ -145,16 +95,11 @@ object RefParity {
     // the time-travel READ path, not two fact-table writes; the write
     // path has its own timing under SnapshotSpec and the ingest queries.
     "snap1_time_travel" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = snapshotDir(s, d)
       val vs = Snapshots.versions(dir).sorted
       val (v1, v2) = (vs.head, vs.last)
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_qty"))
-      summarize(Snapshots.read(s, dir, Some(v1)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir), 2))
-        .unionAll(summarize(Snapshots.changes(s, dir, v1, v2), 3))
+      snapRows(Snapshots.read(s, dir, Some(v1)), Snapshots.read(s, dir),
+        Snapshots.changes(s, dir, v1, v2))(qtyAggs)
     },
     // Merge-on-read DELETE via deletion vectors: the staged tree commits
     // the lineitem slice, then DV-deletes l_quantity < 5 WITHOUT rewriting
@@ -164,14 +109,10 @@ object RefParity {
     // recomputes both from lineitem directly, so a DV bug — wrong
     // coordinates, mis-applied vector, resurrected rows — breaks the hash.
     "snap2_dv_delete" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = dvSnapshotDir(s, d)
       val vs = Snapshots.versions(dir).sorted
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_qty"))
-      summarize(Snapshots.read(s, dir, Some(vs.head)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir, Some(vs.last)), 2))
+      snapRows(Snapshots.read(s, dir, Some(vs.head)),
+        Snapshots.read(s, dir, Some(vs.last)))(qtyAggs)
     },
     // Incrementally-maintained materialized aggregate view: built against
     // snap1's v1 (pre-1997 lineitem slice), then refreshed with the v2
@@ -182,7 +123,6 @@ object RefParity {
     // mis-merged group breaks the hash. l_quantity sums are exact in
     // double at any accumulation order, so incremental == full bit-wise.
     "mv1_incremental_agg" -> { (s, d) =>
-      import graft.ingest.Snapshots
       Snapshots.read(s, mvDir(s, d))
         .select(col("l_orderkey"), col("n_rows"), col("sum_v"))
     },
@@ -196,7 +136,6 @@ object RefParity {
     // hash. Quantities are small integers — double arithmetic is exact at
     // any accumulation order.
     "mv2_minmax_view" -> { (s, d) =>
-      import graft.ingest.Snapshots
       Snapshots.read(s, mv2Dir(s, d) + "/mv")
         .select(col("l_orderkey"), col("n_rows"), col("sum_v"),
           col("min_v"), col("max_v"))
@@ -208,17 +147,9 @@ object RefParity {
     // plan reads the VIEW base and not the source base), so a silently
     // broken rewrite fails the hash even though results would coincide.
     "mv4_auto_rewrite" -> { (s, d) =>
-      val mv = mvDir(s, d)
-      val src = snapshotDir(s, d)
-      graft.ingest.MatView.register(src, mv, Seq("l_orderkey"), "l_quantity")
-      val agg = s.read.format("graft").load(src)
-        .groupBy(col("l_orderkey"))
+      viaView(s, d)(_.groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v"),
-          avg(col("l_quantity")).as("avg_v"))
-      val bases = graft.connector.MvRewriteRule
-        .graftScanBases(agg.queryExecution.optimizedPlan)
-      val fired = bases.contains(mv) && !bases.contains(src)
-      agg.withColumn("rewrite_fired", lit(fired))
+          avg(col("l_quantity")).as("avg_v")))
     },
     "mv5_rewrite_filtered" -> { (s, d) =>
       // The most common dashboard shape: the mv4 aggregate UNDER a WHERE
@@ -227,17 +158,9 @@ object RefParity {
       // still fires — `rewrite_fired` pins the plan substitution into
       // the hash, and the oracle recomputes the filtered aggregate from
       // the raw rows, so the substituted answer must be value-exact.
-      val mv = mvDir(s, d)
-      val src = snapshotDir(s, d)
-      graft.ingest.MatView.register(src, mv, Seq("l_orderkey"), "l_quantity")
-      val agg = s.read.format("graft").load(src)
-        .filter(col("l_orderkey") % 3 === 0)
+      viaView(s, d)(_.filter(col("l_orderkey") % 3 === 0)
         .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v"))
-      val bases = graft.connector.MvRewriteRule
-        .graftScanBases(agg.queryExecution.optimizedPlan)
-      val fired = bases.contains(mv) && !bases.contains(src)
-      agg.withColumn("rewrite_fired", lit(fired))
+        .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v")))
     },
     "mv6_rewrite_having" -> { (s, d) =>
       // The second-most-common dashboard shape (r14): the mv4 aggregate
@@ -249,18 +172,10 @@ object RefParity {
       // commutes only when key-only): HAVING always commutes because it
       // never changes group CONTENTS, only which groups survive.
       // `rewrite_fired` pins the substitution into the hash.
-      val mv = mvDir(s, d)
-      val src = snapshotDir(s, d)
-      graft.ingest.MatView.register(src, mv, Seq("l_orderkey"), "l_quantity")
-      val agg = s.read.format("graft").load(src)
-        .groupBy(col("l_orderkey"))
+      viaView(s, d)(_.groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v"),
           avg(col("l_quantity")).as("avg_v"))
-        .filter(col("sum_v") >= 100.0 && col("n_rows") >= 3)
-      val bases = graft.connector.MvRewriteRule
-        .graftScanBases(agg.queryExecution.optimizedPlan)
-      val fired = bases.contains(mv) && !bases.contains(src)
-      agg.withColumn("rewrite_fired", lit(fired))
+        .filter(col("sum_v") >= 100.0 && col("n_rows") >= 3))
     },
     "mv7_rewrite_rollup" -> { (s, d) =>
       // The PARTIAL-KEY rollup rewrite (r14): a GLOBAL aggregate over the
@@ -272,19 +187,10 @@ object RefParity {
       // double at any accumulation order, so re-association is bit-safe
       // and the recomputing oracle hash-checks the substituted answer;
       // `rewrite_fired` pins the plan substitution itself.
-      val mv = mvDir(s, d)
-      val src = snapshotDir(s, d)
-      graft.ingest.MatView.register(src, mv, Seq("l_orderkey"), "l_quantity")
-      val agg = s.read.format("graft").load(src)
-        .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v"),
-          avg(col("l_quantity")).as("avg_v"))
-      val bases = graft.connector.MvRewriteRule
-        .graftScanBases(agg.queryExecution.optimizedPlan)
-      val fired = bases.contains(mv) && !bases.contains(src)
-      agg.withColumn("rewrite_fired", lit(fired))
+      viaView(s, d)(_.agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_v"),
+        avg(col("l_quantity")).as("avg_v")))
     },
     "mv3_distinct_view" -> { (s, d) =>
-      import graft.ingest.Snapshots
       Snapshots.read(s, mv3Dir(s, d) + "/mv")
         .select(col("l_orderkey"), col("n_rows"), col("sum_v"),
           expr("hll_sketch_estimate(ndv_sketch)").as("ndv"))
@@ -299,7 +205,6 @@ object RefParity {
     // from lineitem ⋈ orders directly, so a delta mis-joined, dropped,
     // or double-counted on either leg breaks the hash.
     "mv8_join_view" -> { (s, d) =>
-      import graft.ingest.Snapshots
       Snapshots.read(s, mv8Dir(s, d) + "/mv")
         .select(col("o_orderpriority"), col("n_rows"), col("sum_v"))
     },
@@ -309,7 +214,6 @@ object RefParity {
     // rewrite must be row-exact and the pruning must never drop a
     // matching file.
     "zo1_zorder_box" -> { (s, d) =>
-      import graft.ingest.Snapshots
       Snapshots.readWhere(s, zorderDir(s, d),
         col("user_id").between(30L, 60L) && col("ts_us").between(LO, HI) &&
           col("value") >= 200.0)
@@ -322,7 +226,6 @@ object RefParity {
     // pre-rename files bind `cust` BY FIELD ID. A name-based resolver
     // would null out half the sum and break the hash.
     "snap5_rename" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = renameSnapshotDir(s, d)
       val v1 = Snapshots.versions(dir).min
       Snapshots.read(s, dir, Some(v1))
@@ -341,14 +244,9 @@ object RefParity {
     // fork read, or the publish dropping/duplicating a file, breaks the
     // hash.
     "snap4_wap" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = wapSnapshotDir(s, d)
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), round(sum(col("l_quantity")), 2).as("sum_qty"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_qty"))
-      summarize(Snapshots.read(s, dir, Some(Snapshots.versions(dir).min)), 1)
-        .unionAll(summarize(Snapshots.readBranch(s, dir, "audit"), 2))
-        .unionAll(summarize(Snapshots.read(s, dir), 3))
+      snapRows(Snapshots.read(s, dir, Some(Snapshots.versions(dir).min)),
+        Snapshots.readBranch(s, dir, "audit"), Snapshots.read(s, dir))(qtyAggs)
     },
     // The table format through its DataSource V2 surface: the same staged
     // two-commit tree read via format("graft") with a pushed-down
@@ -369,7 +267,6 @@ object RefParity {
     // commit (the pre-1997 slice), so a catalog user gets reproducible
     // dataset versions in plain SQL.
     "cn2_connector_sql" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = snapshotDir(s, d)
       val v1 = Snapshots.versions(dir).min
       s.sql(s"CREATE OR REPLACE TEMPORARY VIEW cn2_view USING graft " +
@@ -400,7 +297,7 @@ object RefParity {
     // precedence, a lost DV coordinate, or a non-atomic publish breaks
     // the hash.
     "mrg3_merge_sql" -> { (s, d) =>
-      val cat = catalogMergeFor(s, d)
+      val cat = catalog(catalogMerge, s, d)
       s.sql(
         s"""SELECT 1 AS snap, count(*) AS n_rows, sum(v) AS sum_v,
            |  sum(CASE WHEN v >= 1000000 THEN 1 ELSE 0 END) AS n_upd
@@ -417,7 +314,7 @@ object RefParity {
     // resolution bug, a version mis-pin, or an INSERT landing in the
     // wrong table breaks the hash.
     "cat1_catalog_sql" -> { (s, d) =>
-      val cat = catalogFor(s, d)
+      val cat = catalog(catalogOrders, s, d)
       s.sql(
         s"""SELECT 1 AS snap, count(*) AS n_rows,
            |  round(sum(o_totalprice), 2) AS sum_p
@@ -432,8 +329,8 @@ object RefParity {
     // not a consumption). A diff that leaked v1 rows, missed v2 files,
     // or double-counted breaks the exact cent sums.
     "inc1_incremental_read" -> { (s, d) =>
-      val base = incrementalFor(s, d)
-      val v1 = graft.ingest.Snapshots.versions(base).min
+      val base = incrementalDir(s, d)
+      val v1 = Snapshots.versions(base).min
       val delta = s.read.format("graft")
         .option("startingVersion", v1.toString).load(base)
         .agg(count("*").as("n"), sum("cents").as("sum_cents"))
@@ -454,7 +351,7 @@ object RefParity {
     // the six lifecycle steps breaks the hash.
     "lin1_row_lineage" -> { (s, d) =>
       val base = lineageDir(s, d)
-      graft.ingest.Snapshots.readLineage(s, base)
+      Snapshots.readLineage(s, base)
         .select(col("doc_id"), col("lang"), col("_row_id").as("row_id"))
     },
     // Identity + generated columns end-to-end: the single insert claimed
@@ -464,7 +361,7 @@ object RefParity {
     // its expression row-wise (sum(dbl - 2*cents) would surface any
     // drift as a nonzero).
     "gen1_identity_generated" -> { (s, d) =>
-      val cat = generatedFor(s, d)
+      val cat = catalog(catalogGenerated, s, d)
       s.sql(
         s"""SELECT count(*) AS n, min(id) AS min_id, max(id) AS max_id,
            |  sum(id) AS sum_id, sum(dbl - 2 * cents) AS gen_drift,
@@ -478,7 +375,7 @@ object RefParity {
     // file breaks a count; a delete that leaked to the source breaks
     // row 1; cents keep the sums exact integers.
     "cl1_shallow_clone" -> { (s, d) =>
-      val cat = cloneFor(s, d)
+      val cat = catalog(catalogClone, s, d)
       s.sql(
         s"""SELECT 1 AS tbl, count(*) AS n, sum(cents) AS sum_cents
            |FROM $cat.core.src
@@ -492,7 +389,7 @@ object RefParity {
     // with the outer GROUP BY in one Catalyst plan (the view inlines, so
     // pushdown/pruning still reach the snapshot scan underneath).
     "vw1_sql_view" -> { (s, d) =>
-      val cat = viewFor(s, d)
+      val cat = catalog(catalogView, s, d)
       s.sql(
         s"""SELECT st, bucket, count(*) AS n,
            |  sum(cents) AS sum_cents
@@ -505,7 +402,7 @@ object RefParity {
     // min_k proves the insert leg landed under the negated keys, and the
     // exact long sum breaks if any update leg value was narrowed.
     "mrg4_merge_evolve" -> { (s, d) =>
-      val cat = mergeEvolveFor(s, d)
+      val cat = catalog(catalogMergeEvolve, s, d)
       s.sql(
         s"""SELECT count(*) AS n_rows, CAST(sum(v) AS BIGINT) AS sum_v,
            |  count(st) AS n_status, min(k) AS min_k
@@ -517,7 +414,7 @@ object RefParity {
     // non-atomic replace (drop + re-create) would lose row 1; a torn one
     // would break row 2's totals.
     "rt1_replace_table" -> { (s, d) =>
-      val cat = replaceTableFor(s, d)
+      val cat = catalog(catalogReplaceTable, s, d)
       s.sql(
         s"""SELECT 1 AS snap, count(*) AS n_rows,
            |  CAST(sum(v) AS BIGINT) AS total
@@ -533,7 +430,7 @@ object RefParity {
     // afterwards. The oracle replays the era algebra from orders in
     // exact longs; a default leaking into the wrong era breaks the hash.
     "dv1_default_values" -> { (s, d) =>
-      val cat = catalogDefaultsFor(s, d)
+      val cat = catalog(catalogDefaults, s, d)
       s.sql(
         s"""SELECT count(*) AS n_rows, CAST(sum(c) AS BIGINT) AS sum_c,
            |  CAST(sum(d) AS BIGINT) AS sum_d,
@@ -547,18 +444,12 @@ object RefParity {
     // narrow values at scan (wrong promotion), lost the era boundary, or
     // mis-dated time travel breaks the hash.
     "ty1_type_widening" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = widenDir(s, d)
       val vs = Snapshots.versions(dir).sorted
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"),
-            sum(col("v").cast("long")).as("sum_v"),
-            sum(when(col("v").cast("long") > 2147483647L, 1L).otherwise(0L))
-              .as("n_wide"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_v"),
-            col("n_wide"))
-      summarize(Snapshots.read(s, dir, Some(vs.head)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir), 2))
+      snapRows(Snapshots.read(s, dir, Some(vs.head)), Snapshots.read(s, dir))(Seq(
+        count(lit(1)).as("n_rows"),
+        sum(col("v").cast("long")).as("sum_v"),
+        sum(when(col("v").cast("long") > 2147483647L, 1L).otherwise(0L)).as("n_wide")))
     },
     // REPLACE WHERE (predicate-scoped atomic backfill): day 3 replaced
     // with negated values TWICE (idempotent re-run staged in the
@@ -568,15 +459,12 @@ object RefParity {
     // backfill leaking outside day 3, or a doubled re-run (duplicate
     // negated rows) each break the hash.
     "rw1_replace_where" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = replaceWhereDir(s, d)
       val vs = Snapshots.versions(dir).sorted
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"),
-            sum(when(col("day") === 3L, 1L).otherwise(0L)).as("n_day3"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_v"), col("n_day3"))
-      summarize(Snapshots.read(s, dir, Some(vs.head)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir, Some(vs.last)), 2))
+      snapRows(Snapshots.read(s, dir, Some(vs.head)),
+        Snapshots.read(s, dir, Some(vs.last)))(Seq(
+        count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"),
+        sum(when(col("day") === 3L, 1L).otherwise(0L)).as("n_day3")))
     },
     // Hidden partitioning end-to-end: the table is DECLARED
     // `PARTITIONED BY (days(ts))` through pure SQL DDL, the write lands
@@ -586,7 +474,7 @@ object RefParity {
     // right). All-exact surfaces: counts, distinct users, and a
     // floor(value*100) integer sum — no double-ordering hazard.
     "cat2_hidden_partition" -> { (s, d) =>
-      val cat = catalogHpFor(s, d)
+      val cat = catalog(catalogHidden, s, d)
       s.sql(
         s"""SELECT CAST(ts AS DATE) AS day, count(*) AS n_events,
            |  count(DISTINCT user_id) AS n_users,
@@ -602,15 +490,10 @@ object RefParity {
     // atomic commit. Row 1 = pre-merge, row 2 = post-merge; all-long
     // arithmetic, so the oracle recomputes both exactly from orders.
     "snap3_merge_upsert" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = mergeSnapshotDir(s, d)
       val vs = Snapshots.versions(dir).sorted
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"),
-            sum(when(col("v") >= 1000000L, 1L).otherwise(0L)).as("n_upd"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_v"), col("n_upd"))
-      summarize(Snapshots.read(s, dir, Some(vs.head)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir, Some(vs.last)), 2))
+      snapRows(Snapshots.read(s, dir, Some(vs.head)),
+        Snapshots.read(s, dir, Some(vs.last)))(updAggs)
     },
     // Equality deletes + no-scan upsert: the staged tree commits
     // (k=o_orderkey, v=o_custkey), upserts key%10 updates (+1_000_000
@@ -623,15 +506,9 @@ object RefParity {
     // delete wrongly hides (refs leaking into the new files), or a
     // non-atomic publish breaks the hash.
     "eq1_upsert_noscan" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = eqSnapshotDir(s, d)
       val v1 = Snapshots.versions(dir).min
-      def summarize(df: DataFrame, snap: Int): DataFrame =
-        df.agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_v"),
-            sum(when(col("v") >= 1000000L, 1L).otherwise(0L)).as("n_upd"))
-          .select(lit(snap).as("snap"), col("n_rows"), col("sum_v"), col("n_upd"))
-      summarize(Snapshots.read(s, dir, Some(v1)), 1)
-        .unionAll(summarize(Snapshots.read(s, dir), 2))
+      snapRows(Snapshots.read(s, dir, Some(v1)), Snapshots.read(s, dir))(updAggs)
     },
     // Change data feed: the staged tree commits evens, appends odds,
     // DV-deletes v < 1000, then no-scan-upserts key%10 (+1_000_000). The
@@ -641,7 +518,6 @@ object RefParity {
     // overlap), or an upsert's old generation missing from the delete
     // half breaks the hash.
     "cdc1_change_feed" -> { (s, d) =>
-      import graft.ingest.Snapshots
       val dir = cdcSnapshotDir(s, d)
       Snapshots.changeFeed(s, dir, 0L, Snapshots.versions(dir).max)
         .select(col("_commit_version").cast("int").as("cv"),
@@ -671,549 +547,106 @@ object RefParity {
     }
   )
 
-  /** Build every staged fixture tree for `sfDir` eagerly. The fixture
-    * builders above run lazily inside the query lambdas; after a cache
-    * wipe or LayoutVersion bump the first TIMED call would otherwise pay
-    * the full staging cost (round 6 recorded mv1 at 6.4× its isolated
-    * time for exactly this reason). Bench calls this in its warmup tier
-    * so timed queries only ever measure the read path.
+  /** This module's entries of the fixture registry (see
+    * [[graft.SparkEntry.fixtures]]).
     */
-  def prestage(s: SparkSession, sfDir: String): Unit = {
-    ingestedEvents(s, sfDir)
-    bloomIndexedEvents(s, sfDir)
-    snapshotDir(s, sfDir)
-    dvSnapshotDir(s, sfDir)
-    mvDir(s, sfDir)
-    mv2Dir(s, sfDir)
-    mv3Dir(s, sfDir)
-    mv8Dir(s, sfDir)
-    zorderDir(s, sfDir)
-    mergeSnapshotDir(s, sfDir)
-    eqSnapshotDir(s, sfDir)
-    cdcSnapshotDir(s, sfDir)
-    wapSnapshotDir(s, sfDir)
-    renameSnapshotDir(s, sfDir)
-    catalogFor(s, sfDir)
-    catalogHpFor(s, sfDir)
-    catalogDefaultsFor(s, sfDir)
-    catalogMergeFor(s, sfDir)
-    replaceWhereDir(s, sfDir)
-    incrementalFor(s, sfDir)
-    generatedFor(s, sfDir)
-    cloneFor(s, sfDir)
-    viewFor(s, sfDir)
-    mergeEvolveFor(s, sfDir)
-    replaceTableFor(s, sfDir)
-    widenDir(s, sfDir)
-    avroOcfDir(s, sfDir)
-    clusteredEventsDir(s, sfDir)
-    lineageDir(s, sfDir)
-    graft.ops.Multimodal.mediaDir(s, sfDir)
-    graft.ops.Sim.annDir(s, sfDir)
-    ()
-  }
+  def fixtures: Seq[Fixture] = Seq(
+    ingestedEvents, snapshotDir, mvDir, dvSnapshotDir, mv2Dir, mv3Dir, mv8Dir,
+    zorderDir, renameSnapshotDir, wapSnapshotDir, mergeSnapshotDir,
+    eqSnapshotDir, cdcSnapshotDir, replaceWhereDir, incrementalDir, widenDir,
+    avroOcfDir, clusteredEventsDir, lineageSrc, lineageDir,
+    catalogOrders, catalogHidden, catalogDefaults, catalogGenerated,
+    catalogClone, catalogView, catalogMergeEvolve, catalogReplaceTable,
+    catalogMerge)
 
-  /** Staged events snapshot range-clustered on user_id for j15: runtime
-    * pruning needs per-file key locality to have files to skip. 64 range
-    * partitions stand in for the many-file layout a real multi-executor
-    * ingest produces.
+  private def lineitem(s: SparkSession, d: String): DataFrame =
+    Tables.table(s, d, "lineitem")
+      .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
+
+  private def ordersKv(s: SparkSession, d: String): DataFrame =
+    Tables.table(s, d, "orders").select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
+
+  private def cents: Column = round(col("o_totalprice") * 100).cast("long").as("cents")
+
+  /** Staged two-commit snapshot tree for snap1 (pre-1997 slice, then the
+    * rest), built once per (LayoutVersion, sf, lineitem fingerprint).
     */
-  private def clusteredEventsDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_rtp", sfDir, "events")) { tmp =>
-      import graft.ingest.Snapshots
-      Snapshots.commit(s,
-        Tables.events(s, sfDir)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-          .repartitionByRange(64, col("user_id")),
-        tmp, sortCols = Seq("user_id"))
-      ()
-    }
-
-  /** Staged Avro OCF copy of the events slice for avro1, built once per
-    * (sf, layout). */
-  private def avroOcfDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_avro", sfDir, "events")) { tmp =>
-      graft.sources.AvroOcf.write(
-        s.read.parquet(s"$sfDir/events.parquet")
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-        tmp)
-    }
-
-  /** Staged catalog warehouse for cat1 (namespace `core`, table `orders`:
-    * v1 = CREATE's empty schema commit, v2 = CTAS append of the
-    * even-keyed slice, v3 = INSERT of the odd), built once per (sf,
-    * layout) through pure SQL DDL. Build and query use DIFFERENT catalog
-    * names keyed by the warehouse fingerprint: catalog instances are
-    * cached by name at first use, and the build's instance points at the
-    * pre-rename staging dir.
-    */
-  private def catalogFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_cat", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bld_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .createOrReplaceTempView("cat1_orders_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      // explicit CREATE + INSERT (not CTAS) so the version topology the
-      // oracle pins (v1 empty, v2 evens, v3 all) is stable — atomic CTAS
-      // (round 10) folds schema + data into ONE commit and would shift it
-      s.sql(s"CREATE TABLE $bld.core.orders " +
-        "(o_orderkey BIGINT, o_totalprice DOUBLE)")
-      s.sql(s"INSERT INTO $bld.core.orders " +
-        "SELECT * FROM cat1_orders_src WHERE o_orderkey % 2 = 0")
-      s.sql(s"INSERT INTO $bld.core.orders " +
-        "SELECT * FROM cat1_orders_src WHERE o_orderkey % 2 = 1")
-      ()
-    }
-    val cat = s"graft_cat_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged warehouse for cat2: `core.ev` is DECLARED `PARTITIONED BY
-    * (days(ts))` — Iceberg's headline hidden-partitioning shape — which
-    * the engine re-expresses as range-clustering on the base column `ts`
-    * (strictly finer than day granularity; see GraftCatalog.createTable).
-    * The INSERT caps records-per-file so the clustered write lands in
-    * several contiguous-day files and a day-range predicate prunes most
-    * of them at planning time through the footer stats. Same build/query
-    * catalog-name split as [[catalogFor]].
-    */
-  private def catalogHpFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_cat2", sfDir, "events")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldhp_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        .createOrReplaceTempView("cat2_events_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.ev " +
-        "(event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE) " +
-        "PARTITIONED BY (days(ts))")
-      val prev = s.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      s.conf.set("spark.sql.files.maxRecordsPerFile", "2500")
-      try s.sql(s"INSERT INTO $bld.core.ev SELECT * FROM cat2_events_src")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => s.conf.unset("spark.sql.files.maxRecordsPerFile")
-      }
-      ()
-    }
-    val cat = s"graft_cat2_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged tree for rw1: v1 commits orders as (day = o_orderkey % 7,
-    * k, v = o_custkey) day-clustered, then TWO identical `replaceWhere`
-    * backfills of day 3 with negated values — the second run exercises
-    * the idempotency contract (its vector hides the first run's rows
-    * before re-appending them), so the final visible state equals one
-    * logical application whatever the run count.
-    */
-  private def replaceWhereDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_rw", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val src = Tables.table(s, sfDir, "orders")
-        .select((col("o_orderkey") % 7).as("day"),
-          col("o_orderkey").as("k"), col("o_custkey").as("v"))
-      Snapshots.commit(s, src, tmp, sortCols = Seq("day"))
-      val fix = src.filter(col("day") === 3)
-        .select(col("day"), col("k"), (-col("v")).as("v"))
-      Snapshots.replaceWhere(s, fix, tmp, col("day") === 3)
-      Snapshots.replaceWhere(s, fix, tmp, col("day") === 3)
-      ()
-    }
-
-  /** Staged warehouse for dv1: `core.dv` created with a declared column
-    * default, filled through three INSERT eras (omitted column → write
-    * default; pre-ADD rows → initial default via files physically
-    * missing the column; post-ADD rows → explicit values). Same
-    * build/query catalog-name split as [[catalogFor]].
-    */
-  private def catalogDefaultsFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_dv", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_blddv_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-        .createOrReplaceTempView("dv1_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.dv (k BIGINT, c BIGINT DEFAULT 7)")
-      s.sql(s"INSERT INTO $bld.core.dv (k) SELECT k FROM dv1_src WHERE k % 3 = 0")
-      s.sql(s"INSERT INTO $bld.core.dv SELECT k, v FROM dv1_src WHERE k % 3 = 1")
-      s.sql(s"ALTER TABLE $bld.core.dv ADD COLUMN d BIGINT DEFAULT 42")
-      s.sql(s"INSERT INTO $bld.core.dv SELECT k, v, v + 1 FROM dv1_src WHERE k % 3 = 2")
-      ()
-    }
-    val cat = s"graft_dv_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged tree for inc1: orders lands in TWO commits (even keys then
-    * odd keys), so an incremental read with the cursor at v1 must return
-    * exactly the odd slice.
-    */
-  private def incrementalFor(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_inc", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val o = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-      Snapshots.commit(s, o.filter(col("k") % 2 === 0), tmp) // v1
-      Snapshots.commit(s, o.filter(col("k") % 2 === 1), tmp) // v2
-      ()
-    }
-
-  /** Staged warehouse for gen1: `core.g` declares an IDENTITY column and
-    * a GENERATED ALWAYS AS (cents * 2) column; ONE INSERT from orders
-    * fills both engine-side (ids from one claimed range = 1..n exactly).
-    */
-  private def generatedFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_gen", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldgen_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .createOrReplaceTempView("gen1_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.g (" +
-        "id BIGINT GENERATED ALWAYS AS IDENTITY, " +
-        "k BIGINT, cents BIGINT, " +
-        "dbl BIGINT GENERATED ALWAYS AS (cents * 2))")
-      s.sql(s"INSERT INTO $bld.core.g (k, cents) SELECT k, cents FROM gen1_src")
-      ()
-    }
-    val cat = s"graft_gen_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged warehouse for cl1: `core.src` = (k, cents) from orders, then
-    * `CALL system.clone` → `core.dup` (zero-copy) and a DV DELETE of the
-    * %7=0 slice ON THE CLONE ONLY — divergence over shared files.
-    */
-  private def cloneFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_cl", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldcl_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .createOrReplaceTempView("cl1_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.src (k BIGINT, cents BIGINT)")
-      s.sql(s"INSERT INTO $bld.core.src SELECT k, cents FROM cl1_src")
-      ()
-    }
-    val cat = s"graft_cl_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    // The clone must happen AFTER the staged rename: its manifest records
-    // the source's data files by ABSOLUTE path, and a clone taken inside
-    // the staging dir would dangle once the tree publishes. Both steps
-    // are idempotent across racing runs: the clone's create is the
-    // manifest CAS (the loser's attempt refuses and is swallowed), and a
-    // duplicate DELETE commit hides zero new rows.
-    val dup = s"$base/core/dup"
-    if (graft.ingest.Snapshots.versions(dup).isEmpty) {
-      try s.sql(s"CALL $cat.system.clone(source => 'core.src', dest => 'core.dup')")
-      catch { case _: IllegalArgumentException => () }
-    }
-    val head = graft.ingest.Snapshots.versions(dup).max
-    if (!graft.ingest.Snapshots.modeOf(dup, head).startsWith("delete-dv"))
-      s.sql(s"DELETE FROM $cat.core.dup WHERE k % 7 = 0")
-    cat
-  }
-
-  /** Staged warehouse for vw1: `core.t` = (k, cents, st) from orders,
-    * plus a persisted SQL view `core.v` (even keys, bucketed) created
-    * through the ViewCatalog API. The view is created AFTER the staged
-    * rename, against the query-name catalog instance (a view stores its
-    * definition catalog context, and the build-name instance points at
-    * the pre-rename staging dir); creation is create-exclusive, so a
-    * concurrent run's duplicate attempt loses the CAS harmlessly.
-    */
-  private def viewFor(s: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.connector.catalog.{Identifier, ViewCatalog, ViewInfo}
-    val base = cacheBase("graft_vw", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    val cat = s"graft_vw_$fp"
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldvw_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"),
-          col("o_orderstatus").as("st"))
-        .createOrReplaceTempView("vw1_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.t (k BIGINT, cents BIGINT, st STRING)")
-      s.sql(s"INSERT INTO $bld.core.t SELECT k, cents, st FROM vw1_src")
-      ()
-    }
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    val vc = s.sessionState.catalogManager.catalog(cat).asInstanceOf[ViewCatalog]
-    val ident = Identifier.of(Array("core"), "v")
-    if (!vc.viewExists(ident)) {
-      val body = "SELECT st, k % 97 AS bucket, cents FROM t WHERE k % 2 = 0"
-      val schema = s.sql(
-        s"SELECT st, k % 97 AS bucket, cents FROM $cat.core.t WHERE k % 2 = 0").schema
-      try vc.createView(new ViewInfo(ident, body, cat, Array("core"), schema,
-        schema.fieldNames, Array.empty, Array.empty,
-        java.util.Collections.emptyMap()))
-      catch { case _: org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException => () }
-    }
-    cat
-  }
-
-  /** Staged warehouse for mrg4: `core.me` = (k, v INT) from orders, then
-    * ONE `MERGE WITH SCHEMA EVOLUTION` whose source carries a BIGINT `v`
-    * (beyond Int range — forces the widening ALTER) plus a brand-new
-    * `st` column (forces the ADD COLUMN): the %3=0 slice updates where
-    * keys match and inserts under negated keys (%15=0). The analyzer
-    * applies both ALTERs through the catalog before the merge plans.
-    */
-  private def mergeEvolveFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_me", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldme_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"),
-          col("o_orderstatus").as("os"))
-        .createOrReplaceTempView("mrg4_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.me (k BIGINT, v INT)")
-      s.sql(s"INSERT INTO $bld.core.me SELECT k, CAST(v AS INT) FROM mrg4_src")
-      s.sql(
-        s"""MERGE WITH SCHEMA EVOLUTION INTO $bld.core.me AS t
-           |USING (SELECT CASE WHEN k % 5 = 0 THEN -k ELSE k END AS k,
-           |              v + 3000000000 AS v, os AS st
-           |       FROM mrg4_src WHERE k % 3 = 0) AS s
-           |ON t.k = s.k
-           |WHEN MATCHED THEN UPDATE SET *
-           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      ()
-    }
-    val cat = s"graft_me_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged warehouse for rt1: `core.rt` = (k, v) from orders (v1 empty
-    * create, v2 insert), then ONE atomic `REPLACE TABLE ... AS SELECT`
-    * (v3) swaps the table for its own per-residue aggregate — the
-    * derived-table refresh pattern RTAS exists for. Same build/query
-    * catalog-name split as [[catalogFor]].
-    */
-  private def replaceTableFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_rt", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldrt_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-        .createOrReplaceTempView("rt1_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      s.sql(s"CREATE TABLE $bld.core.rt (k BIGINT, v BIGINT)")
-      s.sql(s"INSERT INTO $bld.core.rt SELECT k, v FROM rt1_src")
-      s.sql(s"REPLACE TABLE $bld.core.rt AS " +
-        "SELECT k % 10 AS bucket, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv " +
-        s"FROM rt1_src GROUP BY k % 10")
-      ()
-    }
-    val cat = s"graft_rt_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Staged tree for ty1: v1 commits orders as (k, v = o_custkey cast to
-    * INT — the narrow era), then `widenColumn(v, long)` (metadata-only)
-    * and an append whose v values exceed Int.MaxValue — so the final
-    * table holds int32-encoded files and int64-encoded files under ONE
-    * wide schema header, and the head read exercises parquet read-time
-    * type widening across eras.
-    */
-  private def widenDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_ty", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val narrow = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"),
-          col("o_custkey").cast("int").as("v"))
-      Snapshots.commit(s, narrow, tmp)
-      Snapshots.widenColumn(tmp, "v", org.apache.spark.sql.types.LongType)
-      val wide = Tables.table(s, sfDir, "orders")
-        .select((col("o_orderkey") + lit(100000000L)).as("k"),
-          (col("o_custkey") + lit(4000000000L)).as("v"))
-      Snapshots.commit(s, wide, tmp)
-      ()
-    }
-
-  /** Staged warehouse for mrg3: `core.om` = (o_orderkey, o_custkey) as
-    * (k, v), then ONE SQL MERGE (v3) applying delete/update/
-    * not-matched-by-source clauses. Same build/query catalog-name split
-    * as [[catalogFor]].
-    */
-  private def catalogMergeFor(s: SparkSession, sfDir: String): String = {
-    val base = cacheBase("graft_catm", sfDir, "orders")
-    val fp = base.substring(base.lastIndexOf('_') + 1)
-    stagedTree(base) { tmp =>
-      val bld = s"graft_bldm_$fp"
-      s.conf.set(s"spark.sql.catalog.$bld", "graft.connector.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$bld.warehouse", tmp)
-      Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-        .createOrReplaceTempView("mrg3_src")
-      s.sql(s"CREATE NAMESPACE $bld.core")
-      // explicit CREATE + INSERT: same topology-stability rationale as
-      // [[catalogFor]] (the oracle pins VERSION AS OF 2 = pre-merge)
-      s.sql(s"CREATE TABLE $bld.core.om (k BIGINT, v BIGINT)")
-      s.sql(s"INSERT INTO $bld.core.om SELECT k, v FROM mrg3_src")
-      s.sql(
-        s"""MERGE INTO $bld.core.om AS t
-           |USING (SELECT k, v FROM mrg3_src WHERE k % 2 = 0) AS s
-           |ON t.k = s.k
-           |WHEN MATCHED AND t.k % 10 = 0 THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET v = t.v + 1000000
-           |WHEN NOT MATCHED BY SOURCE AND t.k % 3 = 0 THEN UPDATE SET v = 0
-           |""".stripMargin)
-      ()
-    }
-    val cat = s"graft_catm_$fp"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", base)
-    cat
-  }
-
-  /** Build-once cache tree: if `base/_STAGED` is absent, stage into a
-    * pid-unique tmp dir via `build`, write the marker only after a FULL
-    * build (a crashed half-build never renames into place), then rename
-    * atomically; the loser of a concurrent rename deletes its staging
-    * dir. Any pre-existing orphan of this pid is cleared first —
-    * container pid reuse makes that likelier than it sounds, and a
-    * Snapshots.commit against an orphaned tree would APPEND to it.
-    * Shared by every staged fixture below so the race/cleanup protocol
-    * is single-sourced.
-    */
-  private[graft] def stagedTree(base: String)(build: String => Unit): String = {
-    if (!new java.io.File(base, "_STAGED").exists()) {
-      val tmp = base + ".tmp-" + java.lang.ProcessHandle.current().pid()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      build(tmp)
-      new java.io.File(tmp, "_STAGED").createNewFile()
-      publishStaged(tmp, base, "_STAGED")
-    }
-    base
-  }
-
-  private[graft] def cacheBase(root: String, sfDir: String, table: String): String = {
-    val fp = java.lang.Long.toHexString(
-      fingerprint(new java.io.File(sfDir, s"$table.parquet")))
-    s"/tmp/$root/$LayoutVersion/" + sfKey(sfDir) + s"_$fp"
-  }
-
-  /** Staged two-commit snapshot tree for snap1, built once per
-    * (LayoutVersion, sf, lineitem fingerprint).
-    */
-  private def snapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_snap", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.Snapshots
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      Snapshots.commit(s, li.filter(col("l_shipdate") < lit("1997-01-01")),
-        tmp, sortCols = Seq("l_orderkey"))
-      Snapshots.commit(s, li.filter(col("l_shipdate") >= lit("1997-01-01")),
-        tmp, sortCols = Seq("l_orderkey"))
-    }
-
-  /** Staged one-commit-plus-one-DV-delete tree for snap2. The DV delete
-    * happens at STAGE time, so the tree is immutable afterwards and
-    * reruns are stable.
-    */
-  private def dvSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_dv", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.Snapshots
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      Snapshots.commit(s, li, tmp, sortCols = Seq("l_orderkey"))
-      Snapshots.deleteWhereDV(s, tmp, col("l_quantity") < 5)
-      ()
-    }
-
-  /** Staged row-lineage lifecycle tree for lin1 (two trees: the source
-    * runs the whole mutation lifecycle, then a shallow clone of it is
-    * what the query reads — so ids must also survive the clone's
-    * by-path file sharing and sidecar carry). Commits are
-    * single-partition and doc_id-sorted, so each file's row order is
-    * doc_id order and every assigned id is derivable by row_number
-    * arithmetic (see the query comment).
-    */
-  private def lineageDir(s: SparkSession, sfDir: String): String = {
-    import graft.ingest.Snapshots
-    val src = stagedTree(cacheBase("graft_lineage", sfDir, "documents")) { tmp =>
-      val docs = Tables.table(s, sfDir, "documents")
-        .select(col("doc_id"), col("lang"))
-      def slice(cond: org.apache.spark.sql.Column) =
-        docs.filter(cond).repartition(1)
-      Snapshots.commit(s, slice(col("doc_id") % 4 < 2), tmp,
-        sortCols = Seq("doc_id"))
-      Snapshots.enableRowLineage(tmp) // backfills the pre-enable commit
-      Snapshots.commit(s, slice(col("doc_id") % 4 === 2), tmp,
-        sortCols = Seq("doc_id"))
-      Snapshots.deleteWhereDV(s, tmp, col("doc_id") % 10 === 3)
-      Snapshots.compact(s, tmp, numFiles = 1) // ids materialize physically
-      Snapshots.commit(s, slice(col("doc_id") % 4 === 3), tmp,
-        sortCols = Seq("doc_id")) // post-compact metadata assignment
-      ()
-    }
-    stagedTree(src + "_clone") { tmp => Snapshots.clone(s, src, tmp); () }
+  private val snapshotDir = Fixture("graft_snap", "lineitem") { (s, d, tmp) =>
+    val li = lineitem(s, d)
+    Snapshots.commit(s, li.filter(col("l_shipdate") < lit("1997-01-01")),
+      tmp, sortCols = Seq("l_orderkey"))
+    Snapshots.commit(s, li.filter(col("l_shipdate") >= lit("1997-01-01")),
+      tmp, sortCols = Seq("l_orderkey"))
   }
 
   /** Staged two-step MV for mv1: full build at the source's v1, then ONE
     * incremental refresh consuming the v2 append — the source is
     * [[snapshotDir]]'s two-commit tree.
     */
-  private def mvDir(s: SparkSession, sfDir: String): String = {
-    val src = snapshotDir(s, sfDir)
-    stagedTree(src + "_mv") { tmp =>
-      import graft.ingest.{MatView, Snapshots}
-      val vs = Snapshots.versions(src).sorted
-      MatView.refresh(s, tmp, src, Seq("l_orderkey"), "l_quantity",
-        upTo = Some(vs.head))
-      MatView.refresh(s, tmp, src, Seq("l_orderkey"), "l_quantity")
-      ()
+  private val mvDir = Fixture("graft_snap", "lineitem", suffix = "_mv") { (s, d, tmp) =>
+    val src = snapshotDir(s, d)
+    val vs = Snapshots.versions(src).sorted
+    MatView.refresh(s, tmp, src, Seq("l_orderkey"), "l_quantity", upTo = Some(vs.head))
+    MatView.refresh(s, tmp, src, Seq("l_orderkey"), "l_quantity")
+  }
+
+  /** Staged one-commit-plus-one-DV-delete tree for snap2. The DV delete
+    * happens at STAGE time, so the tree is immutable afterwards and
+    * reruns are stable.
+    */
+  private val dvSnapshotDir = Fixture("graft_dv", "lineitem") { (s, d, tmp) =>
+    Snapshots.commit(s, lineitem(s, d), tmp, sortCols = Seq("l_orderkey"))
+    Snapshots.deleteWhereDV(s, tmp, col("l_quantity") < 5)
+  }
+
+  /** A staged MV lifecycle over its own lineitem source (`/src`): the view
+    * (`/mv`) is built at v1 (pre-1997 slice), then ONE refresh consumes an
+    * append (the post-1997 rows) plus a DV delete (l_quantity < 5). The
+    * delete removes per-group minima, so the removal paths run at stage
+    * time; the tree is immutable afterwards. `refresh(s, d, mv, src,
+    * upTo)` is the variant's `MatView.refresh` call.
+    */
+  private def mvLifecycle(root: String)(
+      refresh: (SparkSession, String, String, String, Option[Long]) => Unit): Fixture =
+    Fixture(root, "lineitem") { (s, d, tmp) =>
+      val li = lineitem(s, d)
+      val (src, mv) = (tmp + "/src", tmp + "/mv")
+      val v1 = Snapshots.commit(s,
+        li.filter(col("l_shipdate") < "1997-01-01"), src, sortCols = Seq("l_orderkey"))
+      refresh(s, d, mv, src, Some(v1))
+      Snapshots.commit(s, li.filter(col("l_shipdate") >= "1997-01-01"), src)
+      Snapshots.deleteWhereDV(s, src, col("l_quantity") < 5)
+      refresh(s, d, mv, src, None)
     }
+
+  /** mv2's min/max view: the delete exercises the
+    * recompute-touched-groups fallback.
+    */
+  private val mv2Dir = mvLifecycle("graft_mv2") { (s, _, mv, src, upTo) =>
+    MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity", upTo = upTo,
+      withMinMax = true)
+  }
+
+  /** mv3's distinct-sketch view: the HLL ndv_sketch column is maintained —
+    * append windows union sketches, the delete window rebuilds touched
+    * groups' sketches from source. Per-order distinct-quantity counts sit
+    * deep in the sketch's exact (coupon) regime, so `hll_sketch_estimate`
+    * equals DuckDB's COUNT(DISTINCT) and the view gets a full hash oracle.
+    */
+  private val mv3Dir = mvLifecycle("graft_mv3") { (s, _, mv, src, upTo) =>
+    MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity", upTo = upTo,
+      distinctCol = "l_quantity")
+  }
+
+  /** mv8's aggregate-join view: every maintained frame is enriched by a
+    * broadcast join to the (immutable) orders dimension so the view keys
+    * on `o_orderpriority` — an attribute only the join can supply.
+    */
+  private val mv8Dir = mvLifecycle("graft_mv8") { (s, d, mv, src, upTo) =>
+    val dim = Tables.table(s, d, "orders")
+      .select(col("o_orderkey"), col("o_orderpriority"))
+    MatView.refresh(s, mv, src, Seq("o_orderpriority"), "l_quantity", upTo = upTo,
+      enrich = _.join(broadcast(dim), col("l_orderkey") === col("o_orderkey")))
   }
 
   /** Staged 3-D z-ordered snapshot table for zo1: the events slice
@@ -1225,182 +658,376 @@ object RefParity {
     * regardless of layout; a row lost or duplicated by the rewrite
     * breaks the hash).
     */
-  private def zorderDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_zo", sfDir, "events")) { tmp =>
-      import graft.ingest.{Snapshots, ZOrder}
-      val ev = Tables.events(s, sfDir).drop("ts", "ts_t")
-      Snapshots.commit(s, ev, tmp)
-      Snapshots.compact(s, tmp, numFiles = 32,
-        layout = Some(df => ZOrder.layoutN(df, Seq("user_id", "ts_us", "value"), 32)))
-      ()
-    }
-
-  /** Staged min/max MV for mv2: initial build at the source's v1
-    * (pre-1997 slice), then one refresh consuming an append (the
-    * post-1997 rows) plus a DV delete (l_quantity < 5) — the delete
-    * removes per-group minima, exercising the recompute-touched-groups
-    * fallback at stage time. The tree is immutable afterwards.
-    */
-  /** Staged distinct-sketch MV lifecycle for mv3: same append + DV-delete
-    * windows as mv2, with the HLL ndv_sketch column maintained — append
-    * windows union sketches, the delete window rebuilds touched groups'
-    * sketches from source. Per-order distinct-quantity counts sit deep in
-    * the sketch's exact (coupon) regime, so `hll_sketch_estimate` equals
-    * DuckDB's COUNT(DISTINCT) and the view gets a full hash oracle.
-    */
-  /** Staged aggregate-join view for mv8: same append + DV-delete windows
-    * as mv3 on the lineitem fact, with every maintained frame enriched by
-    * a broadcast join to the (immutable) orders dimension so the view
-    * keys on `o_orderpriority` — an attribute only the join can supply.
-    */
-  private def mv8Dir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_mv8", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.{MatView, Snapshots}
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      val dim = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      val enrich: DataFrame => DataFrame =
-        df => df.join(broadcast(dim), col("l_orderkey") === col("o_orderkey"))
-      val src = tmp + "/src"
-      val mv = tmp + "/mv"
-      val v1 = Snapshots.commit(s,
-        li.filter(col("l_shipdate") < "1997-01-01"), src, sortCols = Seq("l_orderkey"))
-      MatView.refresh(s, mv, src, Seq("o_orderpriority"), "l_quantity",
-        upTo = Some(v1), enrich = enrich)
-      Snapshots.commit(s, li.filter(col("l_shipdate") >= "1997-01-01"), src)
-      Snapshots.deleteWhereDV(s, src, col("l_quantity") < 5)
-      MatView.refresh(s, mv, src, Seq("o_orderpriority"), "l_quantity",
-        enrich = enrich)
-      ()
-    }
-
-  private def mv3Dir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_mv3", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.{MatView, Snapshots}
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      val src = tmp + "/src"
-      val mv = tmp + "/mv"
-      val v1 = Snapshots.commit(s,
-        li.filter(col("l_shipdate") < "1997-01-01"), src, sortCols = Seq("l_orderkey"))
-      MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity",
-        upTo = Some(v1), distinctCol = "l_quantity")
-      Snapshots.commit(s, li.filter(col("l_shipdate") >= "1997-01-01"), src)
-      Snapshots.deleteWhereDV(s, src, col("l_quantity") < 5)
-      MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity",
-        distinctCol = "l_quantity")
-      ()
-    }
-
-  private def mv2Dir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_mv2", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.{MatView, Snapshots}
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      val src = tmp + "/src"
-      val mv = tmp + "/mv"
-      val v1 = Snapshots.commit(s,
-        li.filter(col("l_shipdate") < "1997-01-01"), src, sortCols = Seq("l_orderkey"))
-      MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity",
-        upTo = Some(v1), withMinMax = true)
-      Snapshots.commit(s, li.filter(col("l_shipdate") >= "1997-01-01"), src)
-      Snapshots.deleteWhereDV(s, src, col("l_quantity") < 5)
-      MatView.refresh(s, mv, src, Seq("l_orderkey"), "l_quantity",
-        withMinMax = true)
-      ()
-    }
+  private val zorderDir = Fixture("graft_zo", "events") { (s, d, tmp) =>
+    Snapshots.commit(s, Tables.events(s, d).drop("ts", "ts_t"), tmp)
+    Snapshots.compact(s, tmp, numFiles = 32, layout = Some(df =>
+      graft.ingest.ZOrder.layoutN(df, Seq("user_id", "ts_us", "value"), 32)))
+  }
 
   /** Staged rename lifecycle for snap5: commit evens as (k, c), rename
     * c→cust, append odds as (k, cust) — all at STAGE time.
     */
-  private def renameSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_rename", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val o = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("c"))
-      Snapshots.commit(s, o.filter(col("k") % 2 === 0), tmp, sortCols = Seq("k"))
-      Snapshots.renameColumn(tmp, "c", "cust")
-      Snapshots.commit(s, o.filter(col("k") % 2 === 1)
-        .select(col("k"), col("c").as("cust")), tmp, sortCols = Seq("k"))
-      ()
-    }
+  private val renameSnapshotDir = Fixture("graft_rename", "orders") { (s, d, tmp) =>
+    val o = ordersKv(s, d).select(col("k"), col("v").as("c"))
+    Snapshots.commit(s, o.filter(col("k") % 2 === 0), tmp, sortCols = Seq("k"))
+    Snapshots.renameColumn(tmp, "c", "cust")
+    Snapshots.commit(s, o.filter(col("k") % 2 === 1)
+      .select(col("k"), col("c").as("cust")), tmp, sortCols = Seq("k"))
+  }
 
   /** Staged WAP lifecycle for snap4: main commit → branch stage →
     * fast-forward, all at STAGE time; the registered query reads the
     * immutable result (fork read, branch read, published read).
     */
-  private def wapSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_wap", sfDir, "lineitem")) { tmp =>
-      import graft.ingest.Snapshots
-      val li = Tables.table(s, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"))
-      Snapshots.commit(s, li.filter(col("l_shipdate") < lit("1996-01-01")),
-        tmp, sortCols = Seq("l_orderkey"))
-      Snapshots.createBranch(tmp, "audit")
-      Snapshots.commitToBranch(s, li.filter(col("l_shipdate") >= lit("1996-01-01")),
-        tmp, "audit", sortCols = Seq("l_orderkey"))
-      Snapshots.fastForward(tmp, "audit")
-      ()
-    }
+  private val wapSnapshotDir = Fixture("graft_wap", "lineitem") { (s, d, tmp) =>
+    val li = lineitem(s, d)
+    Snapshots.commit(s, li.filter(col("l_shipdate") < lit("1996-01-01")),
+      tmp, sortCols = Seq("l_orderkey"))
+    Snapshots.createBranch(tmp, "audit")
+    Snapshots.commitToBranch(s, li.filter(col("l_shipdate") >= lit("1996-01-01")),
+      tmp, "audit", sortCols = Seq("l_orderkey"))
+    Snapshots.fastForward(tmp, "audit")
+  }
 
-  /** Staged commit + one atomic merge for snap3. Updates mark themselves
-    * with a +1_000_000 offset on v, inserts negate the key: both are
+  /** snap3's and eq1's upsert source: key%10 updates mark themselves with
+    * a +1_000_000 offset on v, key%100 inserts negate the key. Both are
     * invertible in exact long arithmetic, so the DuckDB oracle
-    * reconstructs the post-merge state from `orders` directly.
+    * reconstructs the post-upsert state from `orders` directly.
     */
-  /** Staged equality-delete lifecycle for eq1: commit, no-scan upsert
-    * (same algebra as snap3's merge — updates +1e6, inserts negate the
-    * key), then an equality delete of every visible key % 7 == 0. All at
-    * stage time; the tree is immutable afterwards.
+  private def upserts(o: DataFrame): DataFrame =
+    o.filter(col("k") % 10 === 0)
+      .select(col("k"), (col("v") + 1000000L).as("v"))
+      .unionAll(o.filter(col("k") % 100 === 0)
+        .select((-col("k")).as("k"), col("v")))
+
+  /** Staged commit + one atomic merge of [[upserts]] for snap3. */
+  private val mergeSnapshotDir = Fixture("graft_merge", "orders") { (s, d, tmp) =>
+    val o = ordersKv(s, d)
+    Snapshots.commit(s, o, tmp, sortCols = Seq("k"))
+    Snapshots.merge(s, tmp, upserts(o), Seq("k"))
+  }
+
+  /** Staged equality-delete lifecycle for eq1: commit, no-scan upsert of
+    * [[upserts]] (snap3's algebra), then an equality delete of every
+    * visible key % 7 == 0. All at stage time; the tree is immutable
+    * afterwards.
     */
-  private def eqSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_eq", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val o = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-      Snapshots.commit(s, o, tmp, sortCols = Seq("k"))
-      val src = o.filter(col("k") % 10 === 0)
-        .select(col("k"), (col("v") + 1000000L).as("v"))
-        .unionAll(o.filter(col("k") % 100 === 0)
-          .select((-col("k")).as("k"), col("v")))
-      Snapshots.upsertByKeys(s, tmp, src, Seq("k"))
-      Snapshots.deleteByKeys(s, tmp,
-        Snapshots.read(s, tmp).filter(col("k") % 7 === 0).select(col("k")))
-      ()
-    }
+  private val eqSnapshotDir = Fixture("graft_eq", "orders") { (s, d, tmp) =>
+    val o = ordersKv(s, d)
+    Snapshots.commit(s, o, tmp, sortCols = Seq("k"))
+    Snapshots.upsertByKeys(s, tmp, upserts(o), Seq("k"))
+    Snapshots.deleteByKeys(s, tmp,
+      Snapshots.read(s, tmp).filter(col("k") % 7 === 0).select(col("k")))
+  }
 
   /** Staged four-commit CDC lifecycle for cdc1: evens append, odds
     * append, DV delete (v < 1000), no-scan upsert (key%10 → +1e6) — every
     * merge-on-read change class the feed must attribute.
     */
-  private def cdcSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_cdc", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val o = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-      Snapshots.commit(s, o.filter(col("k") % 2 === 0), tmp, sortCols = Seq("k"))
-      Snapshots.commit(s, o.filter(col("k") % 2 === 1), tmp, sortCols = Seq("k"))
-      Snapshots.deleteWhereDV(s, tmp, col("v") < 1000L)
-      Snapshots.upsertByKeys(s, tmp,
-        o.filter(col("k") % 10 === 0).select(col("k"), (col("v") + 1000000L).as("v")),
-        Seq("k"))
-      ()
+  private val cdcSnapshotDir = Fixture("graft_cdc", "orders") { (s, d, tmp) =>
+    val o = ordersKv(s, d)
+    Snapshots.commit(s, o.filter(col("k") % 2 === 0), tmp, sortCols = Seq("k"))
+    Snapshots.commit(s, o.filter(col("k") % 2 === 1), tmp, sortCols = Seq("k"))
+    Snapshots.deleteWhereDV(s, tmp, col("v") < 1000L)
+    Snapshots.upsertByKeys(s, tmp,
+      o.filter(col("k") % 10 === 0).select(col("k"), (col("v") + 1000000L).as("v")),
+      Seq("k"))
+  }
+
+  /** Staged tree for rw1: v1 commits orders as (day = o_orderkey % 7,
+    * k, v = o_custkey) day-clustered, then TWO identical `replaceWhere`
+    * backfills of day 3 with negated values — the second run exercises
+    * the idempotency contract (its vector hides the first run's rows
+    * before re-appending them), so the final visible state equals one
+    * logical application whatever the run count.
+    */
+  private val replaceWhereDir = Fixture("graft_rw", "orders") { (s, d, tmp) =>
+    val src = ordersKv(s, d).select((col("k") % 7).as("day"), col("k"), col("v"))
+    Snapshots.commit(s, src, tmp, sortCols = Seq("day"))
+    val fix = src.filter(col("day") === 3)
+      .select(col("day"), col("k"), (-col("v")).as("v"))
+    Snapshots.replaceWhere(s, fix, tmp, col("day") === 3)
+    Snapshots.replaceWhere(s, fix, tmp, col("day") === 3)
+  }
+
+  /** Staged tree for inc1: orders lands in TWO commits (even keys then
+    * odd keys), so an incremental read with the cursor at v1 must return
+    * exactly the odd slice.
+    */
+  private val incrementalDir = Fixture("graft_inc", "orders") { (s, d, tmp) =>
+    val kc = Tables.table(s, d, "orders").select(col("o_orderkey").as("k"), cents)
+    Snapshots.commit(s, kc.filter(col("k") % 2 === 0), tmp) // v1
+    Snapshots.commit(s, kc.filter(col("k") % 2 === 1), tmp) // v2
+  }
+
+  /** Staged tree for ty1: v1 commits orders as (k, v = o_custkey cast to
+    * INT — the narrow era), then `widenColumn(v, long)` (metadata-only)
+    * and an append whose v values exceed Int.MaxValue — so the final
+    * table holds int32-encoded files and int64-encoded files under ONE
+    * wide schema header, and the head read exercises parquet read-time
+    * type widening across eras.
+    */
+  private val widenDir = Fixture("graft_ty", "orders") { (s, d, tmp) =>
+    val o = ordersKv(s, d)
+    Snapshots.commit(s, o.select(col("k"), col("v").cast("int").as("v")), tmp)
+    Snapshots.widenColumn(tmp, "v", org.apache.spark.sql.types.LongType)
+    Snapshots.commit(s, o.select((col("k") + lit(100000000L)).as("k"),
+      (col("v") + lit(4000000000L)).as("v")), tmp)
+  }
+
+  /** Staged Avro OCF copy of the events slice for avro1, built once per
+    * (sf, layout). */
+  private val avroOcfDir = Fixture("graft_avro", "events") { (s, d, tmp) =>
+    graft.sources.AvroOcf.write(
+      s.read.parquet(s"$d/events.parquet")
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
+      tmp)
+  }
+
+  /** Staged events snapshot range-clustered on user_id for j15: runtime
+    * pruning needs per-file key locality to have files to skip. 64 range
+    * partitions stand in for the many-file layout a real multi-executor
+    * ingest produces.
+    */
+  private val clusteredEventsDir = Fixture("graft_rtp", "events") { (s, d, tmp) =>
+    Snapshots.commit(s,
+      Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+        .repartitionByRange(64, col("user_id")),
+      tmp, sortCols = Seq("user_id"))
+  }
+
+  /** Staged row-lineage lifecycle for lin1. Commits are single-partition
+    * and doc_id-sorted, so each file's row order is doc_id order and
+    * every assigned id is derivable by row_number arithmetic (see the
+    * query comment).
+    */
+  private val lineageSrc = Fixture("graft_lineage", "documents") { (s, d, tmp) =>
+    val docs = Tables.table(s, d, "documents").select(col("doc_id"), col("lang"))
+    def slice(cond: Column) = docs.filter(cond).repartition(1)
+    Snapshots.commit(s, slice(col("doc_id") % 4 < 2), tmp, sortCols = Seq("doc_id"))
+    Snapshots.enableRowLineage(tmp) // backfills the pre-enable commit
+    Snapshots.commit(s, slice(col("doc_id") % 4 === 2), tmp, sortCols = Seq("doc_id"))
+    Snapshots.deleteWhereDV(s, tmp, col("doc_id") % 10 === 3)
+    Snapshots.compact(s, tmp, numFiles = 1) // ids materialize physically
+    Snapshots.commit(s, slice(col("doc_id") % 4 === 3), tmp,
+      sortCols = Seq("doc_id")) // post-compact metadata assignment
+  }
+
+  /** The shallow clone of [[lineageSrc]] that lin1 reads — so ids must
+    * also survive the clone's by-path file sharing and sidecar carry.
+    */
+  private val lineageDir = Fixture("graft_lineage", "documents", suffix = "_clone") {
+    (s, d, tmp) => Snapshots.clone(s, lineageSrc(s, d), tmp)
+  }
+
+  private def register(s: SparkSession, cat: String, warehouse: String): Unit = {
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.connector.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", warehouse)
+  }
+
+  /** The query catalog over a catalog fixture's warehouse: `<root>_<fp>`. */
+  private def catalog(f: Fixture, s: SparkSession, d: String): String =
+    s"${f.root}_${Fixture.fingerprintOf(f(s, d))}"
+
+  /** A catalog warehouse staged through pure SQL DDL: namespace `core`,
+    * then `ddl(buildCatalog, sourceView)`, where the source view is
+    * `source` over the fingerprinted table, under the session settings
+    * `conf`. Build and query use DIFFERENT catalog names keyed by the
+    * warehouse fingerprint: catalog instances are cached by name at first
+    * use, and the build's instance points at the pre-rename staging dir.
+    * Every use registers the query catalog, then runs `afterPublish(s,
+    * catalog, base)` for steps that must see the published warehouse.
+    */
+  private def catalogFixture(root: String, table: String, source: DataFrame => DataFrame,
+                             conf: Map[String, String] = Map.empty,
+                             afterPublish: (SparkSession, String, String) => Unit =
+                               (_, _, _) => ())(
+      ddl: (String, String) => Seq[String]): Fixture =
+    Fixture(root, table, after = { (s, base) =>
+      val cat = s"${root}_${Fixture.fingerprintOf(base)}"
+      register(s, cat, base)
+      afterPublish(s, cat, base)
+    }) { (s, d, tmp) =>
+      val bld = s"${root}_bld_${Fixture.fingerprintOf(Fixture.cacheBase(root, d, table))}"
+      register(s, bld, tmp)
+      source(Tables.table(s, d, table)).createOrReplaceTempView(s"${root}_src")
+      s.sql(s"CREATE NAMESPACE $bld.core")
+      val prev = conf.keys.map(k => k -> s.conf.getOption(k))
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      try ddl(bld, s"${root}_src").foreach(s.sql)
+      finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
     }
 
-  private def mergeSnapshotDir(s: SparkSession, sfDir: String): String =
-    stagedTree(cacheBase("graft_merge", sfDir, "orders")) { tmp =>
-      import graft.ingest.Snapshots
-      val o = Tables.table(s, sfDir, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("v"))
-      Snapshots.commit(s, o, tmp, sortCols = Seq("k"))
-      val src = o.filter(col("k") % 10 === 0)
-        .select(col("k"), (col("v") + 1000000L).as("v"))
-        .unionAll(o.filter(col("k") % 100 === 0)
-          .select((-col("k")).as("k"), col("v")))
-      Snapshots.merge(s, tmp, src, Seq("k"))
-      ()
-    }
+  /** Staged catalog warehouse for cat1 (table `core.orders`: v1 =
+    * CREATE's empty schema commit, v2 = the even-keyed slice, v3 = the
+    * odd).
+    */
+  private val catalogOrders = catalogFixture("graft_cat", "orders",
+      _.select(col("o_orderkey"), col("o_totalprice"))) { (bld, src) => Seq(
+    // explicit CREATE + INSERT (not CTAS) so the version topology the
+    // oracle pins (v1 empty, v2 evens, v3 all) is stable — atomic CTAS
+    // (round 10) folds schema + data into ONE commit and would shift it
+    s"CREATE TABLE $bld.core.orders (o_orderkey BIGINT, o_totalprice DOUBLE)",
+    s"INSERT INTO $bld.core.orders SELECT * FROM $src WHERE o_orderkey % 2 = 0",
+    s"INSERT INTO $bld.core.orders SELECT * FROM $src WHERE o_orderkey % 2 = 1")
+  }
+
+  /** Staged warehouse for cat2: `core.ev` is DECLARED `PARTITIONED BY
+    * (days(ts))` — Iceberg's headline hidden-partitioning shape — which
+    * the engine re-expresses as range-clustering on the base column `ts`
+    * (strictly finer than day granularity; see GraftCatalog.createTable).
+    * The INSERT caps records-per-file so the clustered write lands in
+    * several contiguous-day files and a day-range predicate prunes most
+    * of them at planning time through the footer stats.
+    */
+  private val catalogHidden = catalogFixture("graft_cat2", "events",
+      _.select(col("event_id"), col("ts"), col("user_id"), col("value")),
+      conf = Map("spark.sql.files.maxRecordsPerFile" -> "2500")) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.ev " +
+      "(event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE) " +
+      "PARTITIONED BY (days(ts))",
+    s"INSERT INTO $bld.core.ev SELECT * FROM $src")
+  }
+
+  /** Staged warehouse for dv1: `core.dv` created with a declared column
+    * default, filled through three INSERT eras (omitted column → write
+    * default; pre-ADD rows → initial default via files physically
+    * missing the column; post-ADD rows → explicit values).
+    */
+  private val catalogDefaults = catalogFixture("graft_dflt", "orders",
+      _.select(col("o_orderkey").as("k"), col("o_custkey").as("v"))) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.dv (k BIGINT, c BIGINT DEFAULT 7)",
+    s"INSERT INTO $bld.core.dv (k) SELECT k FROM $src WHERE k % 3 = 0",
+    s"INSERT INTO $bld.core.dv SELECT k, v FROM $src WHERE k % 3 = 1",
+    s"ALTER TABLE $bld.core.dv ADD COLUMN d BIGINT DEFAULT 42",
+    s"INSERT INTO $bld.core.dv SELECT k, v, v + 1 FROM $src WHERE k % 3 = 2")
+  }
+
+  /** Staged warehouse for gen1: `core.g` declares an IDENTITY column and
+    * a GENERATED ALWAYS AS (cents * 2) column; ONE INSERT from orders
+    * fills both engine-side (ids from one claimed range = 1..n exactly).
+    */
+  private val catalogGenerated = catalogFixture("graft_gen", "orders",
+      _.select(col("o_orderkey").as("k"), cents)) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.g (" +
+      "id BIGINT GENERATED ALWAYS AS IDENTITY, " +
+      "k BIGINT, cents BIGINT, " +
+      "dbl BIGINT GENERATED ALWAYS AS (cents * 2))",
+    s"INSERT INTO $bld.core.g (k, cents) SELECT k, cents FROM $src")
+  }
+
+  /** Staged warehouse for cl1: `core.src` = (k, cents) from orders, then
+    * `CALL system.clone` → `core.dup` (zero-copy) and a DV DELETE of the
+    * %7=0 slice ON THE CLONE ONLY — divergence over shared files.
+    *
+    * The clone must happen AFTER the staged rename: its manifest records
+    * the source's data files by ABSOLUTE path, and a clone taken inside
+    * the staging dir would dangle once the tree publishes. Both steps
+    * are idempotent across racing runs: the clone's create is the
+    * manifest CAS (the loser's attempt refuses and is swallowed), and a
+    * duplicate DELETE commit hides zero new rows.
+    */
+  private val catalogClone = catalogFixture("graft_cl", "orders",
+      _.select(col("o_orderkey").as("k"), cents),
+      afterPublish = { (s, cat, base) =>
+        val dup = s"$base/core/dup"
+        if (Snapshots.versions(dup).isEmpty) {
+          try s.sql(s"CALL $cat.system.clone(source => 'core.src', dest => 'core.dup')")
+          catch { case _: IllegalArgumentException => () }
+        }
+        val head = Snapshots.versions(dup).max
+        if (!Snapshots.modeOf(dup, head).startsWith("delete-dv"))
+          s.sql(s"DELETE FROM $cat.core.dup WHERE k % 7 = 0")
+      }) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.src (k BIGINT, cents BIGINT)",
+    s"INSERT INTO $bld.core.src SELECT k, cents FROM $src")
+  }
+
+  /** Staged warehouse for vw1: `core.t` = (k, cents, st) from orders,
+    * plus a persisted SQL view `core.v` (even keys, bucketed) created
+    * through the ViewCatalog API. The view is created AFTER the staged
+    * rename, against the query-name catalog instance (a view stores its
+    * definition catalog context, and the build-name instance points at
+    * the pre-rename staging dir); creation is create-exclusive, so a
+    * concurrent run's duplicate attempt loses the CAS harmlessly.
+    */
+  private val catalogView = catalogFixture("graft_vw", "orders",
+      _.select(col("o_orderkey").as("k"), cents, col("o_orderstatus").as("st")),
+      afterPublish = { (s, cat, _) =>
+        import org.apache.spark.sql.connector.catalog.{Identifier, ViewCatalog, ViewInfo}
+        val vc = s.sessionState.catalogManager.catalog(cat).asInstanceOf[ViewCatalog]
+        val ident = Identifier.of(Array("core"), "v")
+        if (!vc.viewExists(ident)) {
+          val body = "SELECT st, k % 97 AS bucket, cents FROM t WHERE k % 2 = 0"
+          val schema = s.sql(
+            s"SELECT st, k % 97 AS bucket, cents FROM $cat.core.t WHERE k % 2 = 0").schema
+          try vc.createView(new ViewInfo(ident, body, cat, Array("core"), schema,
+            schema.fieldNames, Array.empty, Array.empty,
+            java.util.Collections.emptyMap()))
+          catch { case _: org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException => () }
+        }
+      }) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.t (k BIGINT, cents BIGINT, st STRING)",
+    s"INSERT INTO $bld.core.t SELECT k, cents, st FROM $src")
+  }
+
+  /** Staged warehouse for mrg4: `core.me` = (k, v INT) from orders, then
+    * ONE `MERGE WITH SCHEMA EVOLUTION` whose source carries a BIGINT `v`
+    * (beyond Int range — forces the widening ALTER) plus a brand-new
+    * `st` column (forces the ADD COLUMN): the %3=0 slice updates where
+    * keys match and inserts under negated keys (%15=0). The analyzer
+    * applies both ALTERs through the catalog before the merge plans.
+    */
+  private val catalogMergeEvolve = catalogFixture("graft_me", "orders",
+      _.select(col("o_orderkey").as("k"), col("o_custkey").as("v"),
+        col("o_orderstatus").as("os"))) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.me (k BIGINT, v INT)",
+    s"INSERT INTO $bld.core.me SELECT k, CAST(v AS INT) FROM $src",
+    s"""MERGE WITH SCHEMA EVOLUTION INTO $bld.core.me AS t
+       |USING (SELECT CASE WHEN k % 5 = 0 THEN -k ELSE k END AS k,
+       |              v + 3000000000 AS v, os AS st
+       |       FROM $src WHERE k % 3 = 0) AS s
+       |ON t.k = s.k
+       |WHEN MATCHED THEN UPDATE SET *
+       |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+  }
+
+  /** Staged warehouse for rt1: `core.rt` = (k, v) from orders (v1 empty
+    * create, v2 insert), then ONE atomic `REPLACE TABLE ... AS SELECT`
+    * (v3) swaps the table for its own per-residue aggregate — the
+    * derived-table refresh pattern RTAS exists for.
+    */
+  private val catalogReplaceTable = catalogFixture("graft_rt", "orders",
+      _.select(col("o_orderkey").as("k"), col("o_custkey").as("v"))) { (bld, src) => Seq(
+    s"CREATE TABLE $bld.core.rt (k BIGINT, v BIGINT)",
+    s"INSERT INTO $bld.core.rt SELECT k, v FROM $src",
+    s"REPLACE TABLE $bld.core.rt AS " +
+      "SELECT k % 10 AS bucket, count(*) AS n, CAST(sum(v) AS BIGINT) AS sv " +
+      s"FROM $src GROUP BY k % 10")
+  }
+
+  /** Staged warehouse for mrg3: `core.om` = (o_orderkey, o_custkey) as
+    * (k, v), then ONE SQL MERGE (v3) applying delete/update/
+    * not-matched-by-source clauses.
+    */
+  private val catalogMerge = catalogFixture("graft_catm", "orders",
+      _.select(col("o_orderkey").as("k"), col("o_custkey").as("v"))) { (bld, src) => Seq(
+    // explicit CREATE + INSERT: same topology-stability rationale as
+    // cat1 (the oracle pins VERSION AS OF 2 = pre-merge)
+    s"CREATE TABLE $bld.core.om (k BIGINT, v BIGINT)",
+    s"INSERT INTO $bld.core.om SELECT k, v FROM $src",
+    s"""MERGE INTO $bld.core.om AS t
+       |USING (SELECT k, v FROM $src WHERE k % 2 = 0) AS s
+       |ON t.k = s.k
+       |WHEN MATCHED AND t.k % 10 = 0 THEN DELETE
+       |WHEN MATCHED THEN UPDATE SET v = t.v + 1000000
+       |WHEN NOT MATCHED BY SOURCE AND t.k % 3 = 0 THEN UPDATE SET v = 0
+       |""".stripMargin)
+  }
 
   private val oracle =
     s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value

@@ -262,6 +262,23 @@ class IngestQuerySpec extends SparkSuite with TableDrivenPropertyChecks {
     assert(got === directCount(13L, 0L, Long.MaxValue / 2))
   }
 
+  test("a non-constant key reads past foreign files under lenient parity mode") {
+    // The root read's schema must not come from whichever file Spark
+    // lists first: `junk.parquet` sorts before every `part-` file.
+    val dir = tmpDir("graft_foreign_root_spec")
+    BlockWriter.write(Tables.events(spark, sf).drop("ts", "ts_t"),
+      dir, partitionCol = "user_id", keyCol = "ts_us",
+      numBuckets = 4, maxRecordsPerFile = 64)
+    new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .foreach(b => java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(b.getPath, "junk.parquet"), "this is not a parquet file"))
+    val got = RangeQuery.query(spark, dir, "user_id", "ts_us",
+      col("user_id"), lit(0L), lit(Long.MaxValue / 2), numBuckets = 4,
+      tolerateForeignFiles = true).count()
+    assert(got === Tables.events(spark, sf).count())
+  }
+
   test("an INT literal key finds the rows of a BIGINT partition column") {
     // The bucket hash depends on the key's type: hashing lit(7) as an INT
     // picked another bucket and returned no rows.
