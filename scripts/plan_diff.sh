@@ -12,8 +12,10 @@
 # for any other build). The sides run one after the other, never
 # concurrently. Plans and diffs are left in the printed work dir.
 #
-# Masked: expression ids (`#<n>`), exchange `plan_id`s, RDD ids, object
-# hash codes, lambda class names and per-process fixture dirs (`pid<n>`).
+# Masked: expression ids (`#<n>`), exchange `plan_id`s, RDD ids, the source
+# line in an RDD's call-site text (`at localCheckpoint at Sim.scala:_`),
+# object hash codes, lambda class names and per-process fixture dirs
+# (`pid<n>`).
 # Expression ids also decide the order of hash-keyed expression sets
 # (e.g. the Expand of RewriteDistinctAggregates), and eager AQE jobs make
 # the ids drift run to run. So a query whose plans differ in the
@@ -40,6 +42,7 @@ dump() { # <tree> <out> [name,name,...]
   (cd "$1" && SPARK_GRAFT_CPUS=$cores sbt --batch "runMain graft.PlanDump $sf $2 plan ${3:-}") \
     2>&1 | grep '^PLANDUMP' | sort > "$2.status"
   sed -i -E 's/#[0-9]+/#/g; s/plan_id=[0-9]+/plan_id=/g; s/RDD\[[0-9]+\]/RDD[]/g;
+    s/ at ([A-Za-z0-9_$]+\.scala):[0-9]+/ at \1:_/g;
     s/Lambda\$[0-9]+\/0x[0-9a-f]+/Lambda/g; s/@[0-9a-f]+/@/g; s/\/pid[0-9]+\//\/pid\//g' "$2"/*.txt
 }
 differing() { # <dir-a> <dir-b>: names of the queries whose plans differ

@@ -332,7 +332,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     val eqPath = new Path(dataDir(base), s"eq_${java.util.UUID.randomUUID().toString.take(8)}")
     k.write.parquet(eqPath.toString)
     val keyFiles = listParquet(spark, eqPath)
-    writeStringNew(fsFor(base), new Path(eqPath, EqRefsName),
+    writeStringNew(fsFor(base), new Path(eqPath, RefsName),
       (keyCols.mkString("\t") +: refs).mkString("\n"))
     beforePublish()
     maybeConvertEq(spark, base, publish(base, Nil, Nil, mode = "delete-eq", parent =>
@@ -402,7 +402,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
           s"eq_${java.util.UUID.randomUUID().toString.take(8)}")
         srcKeys.write.parquet(eqPath.toString)
         val keyFiles = listParquet(spark, eqPath)
-        writeStringNew(fsFor(base), new Path(eqPath, EqRefsName),
+        writeStringNew(fsFor(base), new Path(eqPath, RefsName),
           (keyCols.mkString("\t") +: refs).mkString("\n"))
         keyFiles
       }
@@ -473,16 +473,11 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     }
     val noDv =
       if (m.dvs.isEmpty) scan0
-      else scan0.join(
-        spark.read.parquet(m.dvs: _*)
-          .withColumnRenamed("dv_file", DvFileCol)
-          .withColumnRenamed("dv_pos", DvPosCol),
-        Seq(DvFileCol, DvPosCol), "left_anti")
+      else scan0.join(readVectors(spark, m.dvs), Seq(DvFileCol, DvPosCol), "left_anti")
     // Semi per batch, union, dedup by coordinate (a row matched by two
     // batches must coord once).
     val hidden = eqBatches.filter(_.refs.exists(liveRel)).map { b =>
-      val keys = spark.read.parquet(b.keyFiles: _*)
-        .select(b.keyCols.map(c => col(c).as(s"_graft_eq_$c")): _*)
+      val keys = readEqKeys(spark, b)
       val cond = b.keyCols.map(c => noDv(c) === keys(s"_graft_eq_$c"))
         .reduce(_ && _) &&
         noDv(DvFileCol).isInCollection(b.refs.filter(liveRel))
@@ -612,7 +607,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
             s"eq_${java.util.UUID.randomUUID().toString.take(8)}")
           k.write.parquet(eqPath.toString)
           val keyFiles = listParquet(spark, eqPath)
-          writeStringNew(fsFor(base), new Path(eqPath, EqRefsName),
+          writeStringNew(fsFor(base), new Path(eqPath, RefsName),
             (keyCols.mkString("\t") +: rs).mkString("\n"))
           (keyFiles, rs)
         }
@@ -737,11 +732,12 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
   private[ingest] val DvFileCol = "_graft_dv_file"
   private[ingest] val DvPosCol = "_graft_dv_pos"
 
-  /** Per-eq-batch sidecar: first line = tab-joined key column names, one
-    * referenced data-file rel key per following line. Rel keys make the
+  /** The referenced-files sidecar of an `eq_*` or `dv_*` dir: one
+    * referenced data-file rel key per line, after (equality batches only)
+    * a first line of tab-joined key column names. Rel keys make the
     * delete relocation-safe, same as DV coordinates.
     */
-  private[ingest] val EqRefsName = "_refs.txt"
+  private[ingest] val RefsName = "_refs.txt"
 
   /** The (file, position) coordinate column names of [[scanWithCoords]]
     * output — public so row-level executors (SQL MERGE/UPDATE) can name
@@ -815,17 +811,10 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
       .withColumn(DvPosCol, lit(null).cast("long"))
       .select(cols.map(col): _*).filter(lit(false))
     if (m.dvs.isEmpty && eqBatches.isEmpty) return empty
-    val dvOpt =
-      if (m.dvs.isEmpty) None
-      else Some(spark.read.parquet(m.dvs: _*)
-        .withColumnRenamed("dv_file", DvFileCol)
-        .withColumnRenamed("dv_pos", DvPosCol))
-    val dvDirtyRel = dvOpt.map(
-        _.select(DvFileCol).distinct().collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty[String])
+    val dvOpt = if (m.dvs.isEmpty) None else Some(readVectors(spark, m.dvs))
     val liveRel = m.files.map(relKey).toSet
-    val eqDirtyRel = eqBatches.flatMap(_.refs).filter(liveRel).toSet
-    val dirty = m.files.filter(f => (dvDirtyRel ++ eqDirtyRel)(relKey(f)))
+    val dirtyRel = referenced(m.dvs, eqBatches)
+    val dirty = m.files.filter(f => dirtyRel(relKey(f)))
     if (dirty.isEmpty) return empty
     val decorated = readWithSchema(spark, m.schema, dirty, mergeSchema = false)
       .withColumn(DvFileCol, substring_index(col("_metadata.file_path"), "/", -3))
@@ -833,8 +822,7 @@ trait SnapshotDeleteOps { self: Snapshots.type =>
     val dvHidden = dvOpt.map(dv =>
       decorated.join(dv, Seq(DvFileCol, DvPosCol), "left_semi"))
     val eqHidden = eqBatches.filter(_.refs.exists(liveRel)).map { b =>
-      val keys = spark.read.parquet(b.keyFiles: _*)
-        .select(b.keyCols.map(c => col(c).as(s"_graft_eq_$c")): _*)
+      val keys = readEqKeys(spark, b)
       val cond = b.keyCols.map(c => decorated(c) === keys(s"_graft_eq_$c"))
         .reduce(_ && _) &&
         decorated(DvFileCol).isInCollection(b.refs.filter(liveRel))

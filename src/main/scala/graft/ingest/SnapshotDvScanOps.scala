@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** The DV/equality-delete-aware scan core and compaction.
@@ -26,12 +26,55 @@ trait SnapshotDvScanOps { self: Snapshots.type =>
     m.eqs.groupBy(f => new Path(f).getParent).toSeq.sortBy(_._1.toString)
       .flatMap { case (dir, keyFiles) =>
         val fs = dir.getFileSystem(hadoopConf)
-        val lines = readString(fs, new Path(dir, EqRefsName)).split("\n", -1)
+        val lines = readString(fs, new Path(dir, RefsName)).split("\n", -1)
           .toSeq.filter(_.nonEmpty)
         val keyCols = lines.head.split("\t").toSeq
         val refs = lines.tail
         if (refs.isEmpty) None else Some(EqBatch(keyCols, refs, keyFiles))
       }
+  }
+
+  /** The schema every deletion vector is written with ([[writeVector]]). */
+  private[ingest] val VectorSchema = StructType(Seq(
+    StructField("dv_file", StringType), StructField("dv_pos", LongType)))
+
+  /** Vector files' coordinates as ([[DvFileCol]], [[DvPosCol]]), read with
+    * [[VectorSchema]], so building the frame runs no schema-inference job.
+    */
+  private[ingest] def readVectors(spark: SparkSession, dvs: Seq[String]): DataFrame =
+    spark.read.schema(VectorSchema).parquet(dvs: _*)
+      .withColumnRenamed("dv_file", DvFileCol)
+      .withColumnRenamed("dv_pos", DvPosCol)
+
+  /** An equality batch's key tuples, renamed `_graft_eq_<col>`. The schema
+    * is one key file's footer, read on the driver: the batch's files come
+    * from one write, so they share it, and Spark's own non-merge inference
+    * converts that same footer with the same converter — in a Spark job.
+    */
+  private[ingest] def readEqKeys(spark: SparkSession, b: EqBatch): DataFrame = {
+    val first = new Path(b.keyFiles.head)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = org.apache.spark.sql.graft.Bridge.parquetSchema(spark,
+      first.getFileSystem(conf).getFileStatus(first), conf)
+    spark.read.schema(schema).parquet(b.keyFiles: _*)
+      .select(b.keyCols.map(c => col(c).as(s"_graft_eq_$c")): _*)
+  }
+
+  /** Which rel keys ([[relKey]]) the vectors `dvs` or the equality batches
+    * reference — the dirty set a delete-aware read decorates and joins.
+    * Metadata IO only: one `_refs.txt` read per vector dir, no Spark job.
+    * A vector dir without `_refs.txt` (written before [[writeVector]]
+    * recorded one) makes every file dirty: a positional anti join removes
+    * nothing from a clean file, so over-marking costs join work, never rows.
+    */
+  private[ingest] def referenced(dvs: Seq[String], eqBatches: Seq[EqBatch]): String => Boolean = {
+    val vectorRefs = dvs.map(f => new Path(f).getParent).distinct.map { dir =>
+      val fs = dir.getFileSystem(hadoopConf)
+      try Some(readString(fs, new Path(dir, RefsName)).split("\n").filter(_.nonEmpty))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+    if (vectorRefs.contains(None)) _ => true
+    else (vectorRefs.flatten.flatten ++ eqBatches.flatMap(_.refs)).toSet
   }
 
   /** Scan of a manifest with row-level deletes applied — deletion vectors
@@ -54,6 +97,12 @@ trait SnapshotDvScanOps { self: Snapshots.type =>
     * the Iceberg v2 sequence-number rule, carried by the refs list
     * instead of per-file sequence numbers. NULL key components never
     * match (SQL equality), mirroring MERGE's join.
+    *
+    * Building the frame runs no Spark job: the dirty set comes from the
+    * delete dirs' `_refs.txt` sidecars ([[referenced]]), and vector and
+    * key files are read with known schemas ([[readVectors]],
+    * [[readEqKeys]]). A table with no row-level delete takes the plain
+    * scan at once.
     */
   private[ingest] def scanWithDvs(spark: SparkSession, m: Manifest,
                           keepCoords: Boolean,
@@ -78,28 +127,16 @@ trait SnapshotDvScanOps { self: Snapshots.type =>
       val scan = readFiles(m.files)
       return if (keepCoords) coords(scan) else scan
     }
-    val dvOpt =
-      if (m.dvs.isEmpty) None
-      else Some(spark.read.parquet(m.dvs: _*)
-        .withColumnRenamed("dv_file", DvFileCol)
-        .withColumnRenamed("dv_pos", DvPosCol))
-    // Dirty-file set: same cardinality class as the manifest listing
-    // itself (bounded by file count), so the driver hop is the one the
-    // read path already makes. Equality refs are already rel keys.
-    val dvDirtyRel = dvOpt.map(
-        _.select(DvFileCol).distinct().collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty[String])
+    val dvOpt = if (m.dvs.isEmpty) None else Some(readVectors(spark, m.dvs))
     val liveRel = m.files.map(relKey).toSet
-    val eqDirtyRel = eqBatches.flatMap(_.refs).filter(liveRel).toSet
-    val dirtyRel = dvDirtyRel ++ eqDirtyRel
+    val dirtyRel = referenced(m.dvs, eqBatches)
     val (dirty, clean) = m.files.partition(f => dirtyRel(relKey(f)))
     // One decorated scan for every dirty file; a row in a DV-only file
     // meets the equality anti join too (and vice versa) — no match, only
     // join traffic, and the traffic is bounded by the dirty slice.
     def applyEq(df: DataFrame): DataFrame =
       eqBatches.filter(_.refs.exists(liveRel)).foldLeft(df) { (d, b) =>
-        val keys = spark.read.parquet(b.keyFiles: _*)
-          .select(b.keyCols.map(c => col(c).as(s"_graft_eq_$c")): _*)
+        val keys = readEqKeys(spark, b)
         val cond = b.keyCols.map(c => d(c) === keys(s"_graft_eq_$c"))
           .reduce(_ && _) &&
           d(DvFileCol).isInCollection(b.refs.filter(liveRel))

@@ -338,19 +338,28 @@ trait SnapshotMetaOps { self: Snapshots.type =>
     files
   }
 
-  /** Stage a deletion vector — `dv`'s (`dv_file`, `dv_pos`) coordinates —
-    * under a fresh `dv_` dir; the write job itself reports the data files
-    * the vector references. Returns (vector files, referenced
-    * rel keys). A vector with no row adds nothing: its dir is removed at
-    * once (it is unreferenced, so nothing else ever would, and expire's
-    * sweep only reclaims .parquet files, leaving empty dirs to accumulate
-    * across repeated no-op deletes) and both results are empty.
+  /** Stage a deletion vector — `dv`'s (`dv_file`, `dv_pos`) coordinates,
+    * cast to [[VectorSchema]] — under a fresh `dv_` dir; the write job
+    * itself reports the data files the vector references. Those rel keys
+    * go to the dir's `_refs.txt` ([[RefsName]], one per line) before the
+    * caller publishes, so readers find the vector's dirty files from
+    * metadata ([[referenced]]) instead of a job over its rows. Returns
+    * (vector files, referenced rel keys). A vector with no row adds
+    * nothing: its dir is removed at once (it is unreferenced, so nothing
+    * else ever would, and expire's sweep only reclaims .parquet files,
+    * leaving empty dirs to accumulate across repeated no-op deletes) and
+    * both results are empty.
     */
   private[ingest] def writeVector(dv: DataFrame, base: String): (Seq[String], Set[String]) = {
     val dvPath = new Path(dataDir(base), s"dv_${java.util.UUID.randomUUID().toString.take(8)}")
-    val written = writeFiles(dv, dvPath,
-      new WriteStats(dv.schema, sketch = false, distinctOf = Some("dv_file")))
+    val coords = dv.select(VectorSchema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+    val written = writeFiles(coords, dvPath,
+      new WriteStats(coords.schema, sketch = false, distinctOf = Some("dv_file")))
     if (written.rows == 0L) { fsFor(base).delete(dvPath, true); (Nil, Set.empty) }
-    else (listParquet(dv.sparkSession, dvPath), written.distinct)
+    else {
+      writeStringNew(fsFor(base), new Path(dvPath, RefsName),
+        written.distinct.toSeq.sorted.mkString("\n"))
+      (listParquet(dv.sparkSession, dvPath), written.distinct)
+    }
   }
 }

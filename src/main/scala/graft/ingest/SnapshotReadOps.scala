@@ -68,9 +68,15 @@ trait SnapshotReadOps { self: Snapshots.type =>
   def scanPinned(spark: SparkSession, base: String, pin: Pin = Pin.Latest,
                  pruneFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                  mergeSchema: Boolean = false,
-                 withRowIds: Boolean = false): DataFrame = {
+                 withRowIds: Boolean = false): DataFrame =
+    scanManifest(spark, base, pinnedManifest(base, pin), pruneFilters, mergeSchema, withRowIds)
+
+  /** [[scanPinned]] of an already-resolved manifest. */
+  private[ingest] def scanManifest(spark: SparkSession, base: String, m: Manifest,
+                                   pruneFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+                                   mergeSchema: Boolean = false,
+                                   withRowIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val m = pinnedManifest(base, pin)
     val kept = FileStats.prune(hadoopConf, m.files, pruneFilters, eraIds(m))
     val rowIds = if (withRowIds) Some(lineageFirsts(base)) else None
     // All files pruned: an empty result with the right schema — plan over
@@ -359,14 +365,14 @@ trait SnapshotReadOps { self: Snapshots.type =>
   def readWhere(spark: SparkSession, base: String,
                 cond: org.apache.spark.sql.Column,
                 asOf: Option[Long] = None): DataFrame = {
-    val pin = asOf.map(Pin.AsOf).getOrElse(Pin.Latest)
+    // One manifest read serves both the schema and the scan.
+    val m = pinnedManifest(base, asOf.map(Pin.AsOf).getOrElse(Pin.Latest))
     // Translation needs the table schema only (an analyzer probe over an
     // empty frame — no file IO, so pruning can drop files the plan never
     // has to see). Legacy header-less tables infer from their footers.
-    val schema = pinnedSchema(base, pin)
-      .getOrElse(scanPinned(spark, base, pin).schema)
+    val schema = m.schema.getOrElse(scanManifest(spark, base, m).schema)
     val filters = org.apache.spark.sql.graft.Bridge.pushableFilters(spark, schema, cond)
-    scanPinned(spark, base, pin, filters).filter(cond)
+    scanManifest(spark, base, m, filters).filter(cond)
   }
 
   /** Read the table at `asOf` (default: latest committed version).
@@ -476,8 +482,7 @@ trait SnapshotReadOps { self: Snapshots.type =>
     // subtracts matched rows, `semi=true` keeps only them.
     def eqJoin(df: DataFrame, batches: Seq[EqBatch], semi: Boolean): DataFrame =
       batches.filter(_.refs.exists(liveRel)).foldLeft(df) { (d, b) =>
-        val keys = spark.read.parquet(b.keyFiles: _*)
-          .select(b.keyCols.map(c => col(c).as(s"_graft_eq_$c")): _*)
+        val keys = readEqKeys(spark, b)
         val cond = b.keyCols.map(c => d(c) === keys(s"_graft_eq_$c"))
           .reduce(_ && _) &&
           d(DvFileCol).isInCollection(b.refs.filter(liveRel))
@@ -498,10 +503,8 @@ trait SnapshotReadOps { self: Snapshots.type =>
     val dvHalf: Option[DataFrame] =
       if (newDvs.isEmpty) None
       else {
-        val dv = spark.read.parquet(newDvs: _*)
-          .withColumnRenamed("dv_file", DvFileCol)
-          .withColumnRenamed("dv_pos", DvPosCol)
-        val dirtyRel = dv.select(DvFileCol).distinct().collect().map(_.getString(0)).toSet
+        val dv = readVectors(spark, newDvs)
+        val dirtyRel = referenced(newDvs, Nil)
         val dirty = mTo.files.filter(f => dirtyRel(relKey(f)))
         // DV WRITERS scan with all deletes applied, so their vectors
         // never reference rows already hidden at their commit — but
@@ -529,10 +532,7 @@ trait SnapshotReadOps { self: Snapshots.type =>
           val scan0 = coords(readF(mTo.schema, dirty))
           val noDv =
             if (mTo.dvs.isEmpty) scan0
-            else scan0.join(
-              spark.read.parquet(mTo.dvs: _*)
-                .withColumnRenamed("dv_file", DvFileCol)
-                .withColumnRenamed("dv_pos", DvPosCol),
+            else scan0.join(readVectors(spark, mTo.dvs),
               Seq(DvFileCol, DvPosCol), "left_anti")
           val visibleAtFrom = eqJoin(noDv, oldEqBatches, semi = false)
           eqHits(visibleAtFrom)

@@ -30,7 +30,15 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - readers list manifests and `spark.read.parquet(files…)` — time
   *    travel is "read an older manifest", incremental consumption is a
   *    file-list diff, and snapshot isolation falls out because appends
-  *    and overwrites only ever ADD data files.
+  *    and overwrites only ever ADD data files;
+  *  - row-level deletes live beside the data: a deletion vector's
+  *    (file, position) coordinates under `data/dv_<uuid>/` (manifest lines
+  *    `dv:`), an equality delete's key tuples under `data/eq_<uuid>/`
+  *    (`eq:`). Each such dir holds a `_refs.txt` sidecar naming the data
+  *    files it references (rel keys), written before the commit publishes,
+  *    so a read finds its dirty files from metadata and builds its plan
+  *    without a Spark job; vectors without one (older tables) mark every
+  *    live file dirty.
   *
   * Scale notes: a manifest holds file paths only (a 100 TB table at 1 GB
   * files ≈ 10⁵ lines, single-digit MB); the read path hands Spark an

@@ -45,7 +45,7 @@ object RangeQuery {
     * through that commit log. A root of 64 buckets is over Spark's
     * parallel-discovery threshold (32), so that read lists in a Spark job.
     * Under `tolerateForeignFiles` a non-constant key's root read also
-    * gets its schema from the first readable footer ([[tolerantSchema]]).
+    * gets its schema from the first readable footer ([[listLayout]]).
     *
     * `tolerateForeignFiles` reproduces the reference's lenient listing
     * (block.go:149-174: filenames that don't parse are skipped, so foreign
@@ -63,26 +63,42 @@ object RangeQuery {
       if (tolerateForeignFiles) spark.read.option("ignoreCorruptFiles", "true")
       else spark.read
     val inRange = col(keyCol).between(startKey, endKey)
-    bucketRead(spark, reader, base, partitionCol, partitionKey, numBuckets, tolerateForeignFiles) match {
+    // A constant key, or a root read under tolerateForeignFiles, lists the
+    // layout on the driver; a plain non-constant key leaves it to Spark.
+    val constant = BlockWriter.bucketFor(spark, partitionKey, numBuckets).isDefined
+    val listed =
+      if (constant || tolerateForeignFiles) listLayout(spark, base, tolerateForeignFiles)
+      else None
+    val bucketed =
+      if (constant) listed.flatMap(bucketRead(spark, reader, base, _, partitionCol, partitionKey, numBuckets))
+      else None
+    bucketed match {
       case Some((df, bucket, key)) =>
         df.filter(col("bucket") === bucket && col(partitionCol) === key && inRange)
       case None =>
         val root = if (!tolerateForeignFiles) reader
-          else tolerantSchema(spark, base).fold(reader)(reader.schema)
+          else listed.flatMap(_.dataSchema).fold(reader)(s => reader.schema(s.add("bucket", IntegerType)))
         root.parquet(base)
           .filter(col("bucket") === pmod(xxhash64(partitionKey), lit(numBuckets)).cast("int") &&
             col(partitionCol) === partitionKey && inRange)
     }
   }
 
-  /** The driver-planned read of a constant key's bucket, with its bucket
-    * and the key cast to the partition column's type; `None` keeps the
-    * root read (see [[query]]).
+  /** A bucketed layout as listed on the driver: its `bucket=N` dirs in
+    * number order, and the schema of the first data file, in bucket and
+    * name order, whose footer reads (hidden names such as `_SUCCESS`,
+    * `.crc` and sidecars skipped). Spark's own inference reads only the
+    * first file it lists, so under `tolerateForeignFiles` a foreign file
+    * listed first (`junk.parquet` sorts before `part-`) would fail the
+    * whole read; unreadable footers are skipped only then.
     */
-  private def bucketRead(spark: SparkSession, reader: DataFrameReader, base: String,
-                         partitionCol: String, partitionKey: Column, numBuckets: Int,
-                         tolerateForeignFiles: Boolean): Option[(DataFrame, Int, Column)] = {
-    if (BlockWriter.bucketFor(spark, partitionKey, numBuckets).isEmpty) return None
+  private case class Layout(buckets: Seq[(Int, Path)], dataSchema: Option[StructType])
+
+  /** One root listing of `base`; None when it does not exist or is a
+    * streaming sink, whose files are visible only through its log.
+    */
+  private def listLayout(spark: SparkSession, base: String,
+                         tolerateForeignFiles: Boolean): Option[Layout] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(base)
     val fs = root.getFileSystem(conf)
@@ -94,8 +110,6 @@ object RangeQuery {
         case _ => None
       }
     }.sortBy(_._1)
-    // The first data file Spark would read (hidden names such as _SUCCESS,
-    // .crc and sidecars skipped) whose footer reads.
     def dataFiles(dir: Path): Iterator[FileStatus] =
       fs.listStatus(dir).filter { st =>
         val n = st.getPath.getName
@@ -105,51 +119,31 @@ object RangeQuery {
       try Some(Bridge.parquetSchema(spark, st, conf))
       catch { case _: IOException | _: RuntimeException if tolerateForeignFiles => None }
     }.nextOption()
+    Some(Layout(buckets, dataSchema))
+  }
+
+  /** The driver-planned read of a constant key's bucket, with its bucket
+    * and the key cast to the partition column's type; `None` keeps the
+    * root read (see [[query]]).
+    */
+  private def bucketRead(spark: SparkSession, reader: DataFrameReader, base: String,
+                         layout: Layout, partitionCol: String, partitionKey: Column,
+                         numBuckets: Int): Option[(DataFrame, Int, Column)] =
     for {
-      data <- dataSchema
+      data <- layout.dataSchema
       field <- data.find(_.name == partitionCol)
       key = partitionKey.cast(field.dataType)
       bucket <- BlockWriter.bucketFor(spark, key, numBuckets)
     } yield {
       val schema = data.add("bucket", IntegerType)
-      val df = buckets.collectFirst { case (`bucket`, dir) => dir } match {
+      val df = layout.buckets.collectFirst { case (`bucket`, dir) => dir } match {
         case Some(dir) => reader.schema(schema).option("basePath", base).parquet(dir.toString)
         case None => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
       }
       (df, bucket, key)
     }
-  }
 
   private val BucketDir = "bucket=(\\d+)".r
-
-  /** The root read's schema under `tolerateForeignFiles`, picked as the
-    * constant-key path picks it: the first data file, in bucket and name
-    * order, whose footer reads, plus `bucket`. Spark's own inference
-    * reads only the first file it lists, so a foreign file listed first
-    * (`junk.parquet` sorts before `part-`) failed the whole read. None
-    * for a streaming sink, whose files are visible only through its log.
-    */
-  private def tolerantSchema(spark: SparkSession, base: String): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(base).getFileSystem(conf)
-    val entries = try fs.listStatus(new Path(base)) catch { case _: FileNotFoundException => return None }
-    if (entries.exists(_.getPath.getName == "_spark_metadata")) return None
-    val dirs = entries.toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case BucketDir(n) if st.isDirectory => Some(n.toInt -> st.getPath)
-        case _ => None
-      }
-    }.sortBy(_._1)
-    dirs.iterator.flatMap { case (_, dir) =>
-      fs.listStatus(dir).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getPath.getName)
-    }.flatMap { st =>
-      try Some(Bridge.parquetSchema(spark, st, conf))
-      catch { case _: IOException | _: RuntimeException => None }
-    }.nextOption().map(_.add("bucket", IntegerType))
-  }
 
   /** [[query]] over a layout whose batches carry evolved (additive)
     * schemas — `mergeSchema` unions the per-file Parquet schemas, so rows
